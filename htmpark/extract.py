@@ -18,6 +18,8 @@ Both are produced by ONE parse via ExtractSink (no second tokenizer pass).
 
 from __future__ import annotations
 
+import re
+
 from .parser import HTML_NS, Parser
 from .sinks import BaseSink
 
@@ -152,14 +154,32 @@ class ExtractSink(BaseSink):
         return "\n".join(out)
 
 
+# the lone surrogates U+DC80..U+DCFF that surrogateescape decoding maps
+# undecodable bytes to (parser deviation D1)
+_UNDECODABLE = re.compile("[\udc80-\udcff]")
+
+
 def extract_doc(html, preserve_ws: bool = False) -> dict:
-    """Parse one document; returns the row the Spark UDF emits."""
+    """Parse one document; returns the row the Spark UDF emits.
+
+    Bytes are decoded strictly first, so a valid page pays the one decode
+    the parser would have done.  Only when that fails is the page decoded
+    with surrogateescape (parser deviation D1); the row's strings then
+    carry U+FFFD for each undecodable byte (a lone surrogate cannot enter
+    an Arrow batch), and each such byte counts one tok_error."""
+    undecodable = 0
+    if isinstance(html, (bytes, bytearray, memoryview)):
+        try:
+            html = str(html, "utf-8")
+        except UnicodeDecodeError:
+            html = str(html, "utf-8", "surrogateescape")
+            undecodable = len(_UNDECODABLE.findall(html))
     sink = ExtractSink()
     p = Parser()
     tb = p.parse(html, sink, preserve_ws)
     if not tb.finished:
         sink.end_document()  # close any open block for best-effort main_text
-    return {
+    row = {
         "text": sink.text,
         "main_text": sink.main_text,
         "title": "".join(sink.title_parts),
@@ -172,3 +192,10 @@ def extract_doc(html, preserve_ws: bool = False) -> dict:
         "tree_errors": tb.tree_errors,
         "parse_ok": tb.finished and not tb.crashed_after_finish,
     }
+    if undecodable:
+        row["tok_errors"] += undecodable
+        for k in ("text", "main_text", "title"):
+            row[k] = _UNDECODABLE.sub("\ufffd", row[k])
+        for k in ("outlinks", "meta_names", "meta_contents"):
+            row[k] = [_UNDECODABLE.sub("\ufffd", v) for v in row[k]]
+    return row

@@ -15,15 +15,23 @@ Spark-first design:
                   anywhere (input_hint mandate).
 * checkpoint    — write-audit-publish per part_id: output written with
                   dynamic partition overwrite (idempotent under retry),
-                  then the partition manifest row is appended (publish).
-                  Resume = broadcast anti-join against the manifest.
+                  then ONE aggregate over the wave's written part_id dirs is
+                  collected (at most wave-size rows), zero-filled for empty
+                  parts on the driver, and appended to the manifest
+                  (publish).  Resume = one collect of the manifest's
+                  (part_id, num_parts) pairs into a driver-side set of done
+                  part ids, then an ``isin`` filter on the remaining ones.
 * metrics       — per-partition lineage row: counts + tokenizer/tree error
                   counters, aggregated from the written output (no second
-                  parse).
+                  parse); the job's totals are summed from the same rows.
 
 At 10^12-document scale the same plan holds: the salt count scales with
-max-host-share × executor count, part_id count scales with total size /
-target partition bytes, and the manifest stays tiny (one row per part).
+max-host-share × executor count; the salted exchange takes as many parse
+tasks as the input scan has splits (Spark's byte-based file sizing), never
+fewer than defaultParallelism, so the parse width grows with the input
+instead of a fixed multiple of the slots; part_id count scales with total
+size / target partition bytes, and the manifest stays tiny (one row per
+part).
 """
 
 from __future__ import annotations
@@ -109,9 +117,9 @@ def read_pages(spark: SparkSession, source: str) -> DataFrame:
 def _parse_batches(batches, preserve_ws: bool = False):
     """mapInPandas worker: Iterator[pd.DataFrame] -> Iterator[pd.DataFrame].
 
-    One Parser per executor task, reused across every row of every Arrow
-    batch (the reference's per-doc state map never crosses documents;
-    neither does ours).
+    Every row is one ``extract_doc`` call, which builds a fresh Parser and
+    sink per document (the reference's per-doc state map never crosses
+    documents; neither does ours).  Any exception becomes an error row.
     """
     import pandas as pd
 
@@ -264,6 +272,20 @@ def detect_host_clustered(df: DataFrame, sample_files: int = 64,
     return same / total >= threshold
 
 
+def _parse_width(df: DataFrame) -> int:
+    """Task count of the salted exchange: the input scan's own split count
+    (Spark's byte-based file sizing), floored at defaultParallelism — the
+    getNumPartitions-vs-parallelism rule of doc_signals / _fan_out.  Each
+    Python parse task carries a fixed cost (BENCH/BASELINE.md "Per-task
+    cost"), so a fixed multiple of the slots makes small inputs pay for
+    tasks that carry almost nothing.  On a scan input (parquet, WARC
+    shards) this is driver-side planning only, never a Spark job; an input
+    whose plan already holds a shuffle would run it here under AQE, so
+    such callers pass ``num_partitions``."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return max(par, df.rdd.getNumPartitions())
+
+
 def salted_repartition(df: DataFrame, salt_buckets: int = 8,
                        num_partitions: int | None = None) -> DataFrame:
     """Spread each url-host over ``salt_buckets`` shuffle keys.
@@ -297,21 +319,28 @@ def extract_pages(df: DataFrame, salt_buckets: int | str = 8,
     interleaving drops the shuffle, proven clustering (or no statistics)
     keeps the 8-bucket insurance.
 
+    ``num_partitions`` pins the salted exchange's task count; by default it
+    is the input scan's split count, floored at defaultParallelism
+    (``_parse_width``).
+
     ``max_html_bytes``: pages larger than this are nulled JVM-SIDE, so a
     pathological multi-GB blob never enters an Arrow batch (an Arrow batch
     is bounded by maxRecordsPerBatch in ROWS, not bytes — one giant row
     per 2048-row batch would otherwise OOM an executor at crawl scale).
     Nulled pages surface as error rows (parse_ok=false, tree_errors=1).
     """
-    cols = [c for c in ("url", "warc_ts", "html", "lang") if c in df.columns]
-    df = df.select(*cols)  # explicit pruning; Catalyst pushes into the scan
+    # explicit pruning (Catalyst pushes it into the scan); warc_ts and lang
+    # are optional inputs that the output schema still carries, so an
+    # absent one enters the parse as typed nulls
+    df = df.select(*[F.col(c) if c in df.columns else F.lit(None).cast(t).alias(c)
+                     for c, t in (("url", "string"), ("warc_ts", "timestamp"),
+                                  ("html", "binary"), ("lang", "string"))])
     # drop WARC rotten-shard lineage sentinels (url AND html both NULL,
     # see warc.read_warc) — they are shard metadata, not pages, and must
     # not become phantom error rows in the extraction output.  Pages
     # nulled by the size cap below keep their url and DO surface as
     # error rows.
-    if "html" in cols and "url" in cols:
-        df = df.where(F.col("url").isNotNull() | F.col("html").isNotNull())
+    df = df.where(F.col("url").isNotNull() | F.col("html").isNotNull())
     if max_html_bytes:
         # octet_length, not length: length() counts CHARACTERS on a string
         # column, letting a multi-byte-heavy page up to ~4x over the byte
@@ -327,10 +356,8 @@ def extract_pages(df: DataFrame, salt_buckets: int | str = 8,
         # target (~64MB) is the wrong yardstick for a CPU-bound parse —
         # measured 8.5k -> 2.6k pages/s when a 260MB corpus coalesced to
         # ~4 parse tasks on 32 cores
-        if not num_partitions:
-            sc = df.sparkSession.sparkContext
-            num_partitions = sc.defaultParallelism * 3
-        df = salted_repartition(df, salt_buckets, num_partitions)
+        df = salted_repartition(df, salt_buckets,
+                                num_partitions or _parse_width(df))
     fn = (lambda it: _parse_batches(it, True)) if preserve_ws else _parse_batches
     return df.mapInPandas(fn, OUTPUT_SCHEMA)
 
@@ -469,10 +496,32 @@ def read_table(spark: SparkSession, path: str, fmt: str = "parquet",
 
 MANIFEST_SCHEMA = ("part_id", "n_pages", "n_ok", "tok_errors", "tree_errors",
                    "text_chars", "min_ts", "max_ts", "num_parts")
+_MANIFEST_COUNTS = MANIFEST_SCHEMA[1:6]
 
 
 def _part_expr(num_parts: int):
     return F.pmod(F.xxhash64(F.col("url")), F.lit(num_parts)).cast("int")
+
+
+def _manifest_rows(audit, wave: list[int], num_parts: int):
+    """A wave's manifest rows (Arrow) from its collected audit aggregate.
+
+    EVERY part_id in the wave gets a row — including empty parts
+    (n_pages=0, zero-filled here), which are guaranteed whenever distinct
+    urls hash into fewer than num_parts buckets.  Without the zero rows an
+    empty part stays in `remaining` forever: each resume re-scans +
+    re-parses it and a completed job never reaches the parts_done==0 early
+    exit."""
+    import pyarrow as pa
+
+    seen = set(audit["part_id"].to_pylist())
+    empty = [p for p in wave if p not in seen]
+    fill = {"part_id": empty, **{c: [0] * len(empty) for c in _MANIFEST_COUNTS}}
+    zeros = pa.table({f.name: fill.get(f.name, [None] * len(empty))
+                      for f in audit.schema}, schema=audit.schema)
+    rows = pa.concat_tables([audit, zeros])
+    return rows.append_column("num_parts",
+                              pa.array([num_parts] * rows.num_rows, pa.int32()))
 
 
 def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
@@ -500,6 +549,14 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
     waves (budgeted/incremental runs; also how tests simulate interruption
     deterministically).
 
+    Spark jobs: a salted wave is five — the salted exchange and the
+    partitioned write (AQE runs the exchange as its own job), the audit
+    aggregate over the wave's written part_id dirs collected to the driver
+    (two again), and one manifest append; an unsalted wave skips the
+    exchange job.  A resume adds one manifest read.  The salted exchange
+    takes max(defaultParallelism, input scan splits) parse tasks, resolved
+    once per call (``_parse_width``).
+
     Safety rails (round-2 hardening):
       * The dynamic partition-overwrite mode is pinned per-write via
         ``.option("partitionOverwriteMode", "dynamic")`` — a caller-supplied
@@ -515,19 +572,23 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
 
     done_ids: set[int] = set()
     if resume:
+        # ONE read of the (tiny, one row per published part) manifest.  The
+        # explicit schema skips the schema-inference job; a manifest written
+        # before num_parts was recorded reads it as null and checks nothing.
         try:
-            man = spark.read.parquet(manifest_path)
+            man = spark.read.schema("part_id int, num_parts int").parquet(
+                manifest_path)
         except Exception:
             man = None
         if man is not None:
-            if "num_parts" in man.columns:
-                prev = {r[0] for r in man.select("num_parts").distinct().collect()}
-                if prev and prev != {num_parts}:
-                    raise ValueError(
-                        f"resume with num_parts={num_parts} but the manifest at "
-                        f"{manifest_path} was written with num_parts={sorted(prev)}; "
-                        "part_id would be recomputed under a different modulus")
-            done_ids = {r[0] for r in man.select("part_id").distinct().collect()}
+            pairs = man.collect()
+            prev = {r.num_parts for r in pairs if r.num_parts is not None}
+            if prev and prev != {num_parts}:
+                raise ValueError(
+                    f"resume with num_parts={num_parts} but the manifest at "
+                    f"{manifest_path} was written with num_parts={sorted(prev)}; "
+                    "part_id would be recomputed under a different modulus")
+            done_ids = {r.part_id for r in pairs}
 
     remaining = sorted(set(range(num_parts)) - done_ids)
     if not remaining:
@@ -541,17 +602,19 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
     if max_waves is not None:
         waves = waves[:max_waves]
 
-    # resolve the salting decision ONCE for the whole job — the input is
-    # fixed across waves, and re-deriving per wave would repeat the
-    # driver-side file listing + footer reads num_parts times
+    # resolve the salting decision and the parse width ONCE for the whole
+    # job — the input is fixed across waves, and re-deriving per wave would
+    # repeat the driver-side file listing + footer reads and the planning
     salt_buckets = _resolve_salt(input_df, salt_buckets)
+    width = _parse_width(input_df) if salt_buckets > 0 else None
 
     df = input_df.withColumn("part_id", _part_expr(num_parts))
     total_parts = 0
     total_pages = 0
     for wave in waves:
         sub = df if len(wave) == num_parts else df.where(F.col("part_id").isin(wave))
-        parsed = extract_pages(sub.drop("part_id"), salt_buckets=salt_buckets)
+        parsed = extract_pages(sub.drop("part_id"), salt_buckets=salt_buckets,
+                               num_partitions=width)
         parsed = parsed.withColumn("part_id", _part_expr(num_parts))
         # WRITE: dynamic partition overwrite -> retried parts replace
         # cleanly; mode pinned at the write site (see docstring)
@@ -559,13 +622,14 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
                .option("partitionOverwriteMode", "dynamic")
                .partitionBy("part_id").parquet(data_path))
 
-        # AUDIT + PUBLISH: aggregate lineage from the written files
-        # (columnar scan of counters only, partition-pruned to this wave's
-        # part_id dirs — no re-parse), append to the manifest.  The explicit
-        # schema keeps the read valid even when the wave produced zero rows.
+        # AUDIT: one aggregate over the written files (columnar scan of
+        # counters only, partition-pruned to this wave's part_id dirs — no
+        # re-parse), collected as Arrow: at most one row per part of the
+        # wave.  The explicit schema keeps the read valid even when the wave
+        # produced zero rows.
         written = (spark.read.schema(parsed.schema).parquet(data_path)
                    .where(F.col("part_id").isin(wave)))
-        agg = written.groupBy("part_id").agg(
+        audit = written.groupBy("part_id").agg(
             F.count("*").alias("n_pages"),
             F.sum(F.col("parse_ok").cast("int")).alias("n_ok"),
             F.sum("tok_errors").alias("tok_errors"),
@@ -573,30 +637,13 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
             F.sum(F.length("text")).alias("text_chars"),
             F.min("warc_ts").alias("min_ts"),
             F.max("warc_ts").alias("max_ts"),
-        )
-        # EVERY part_id in the wave publishes a row — including empty parts
-        # (n_pages=0), which are guaranteed whenever distinct urls hash into
-        # fewer than num_parts buckets.  Without the zero rows an empty part
-        # stays in `remaining` forever: each resume re-scans + re-parses it
-        # and a completed job never reaches the parts_done==0 early exit.
-        wave_ids = spark.createDataFrame([(int(p),) for p in wave], "part_id int")
-        manifest = (
-            wave_ids.join(agg, "part_id", "left")
-            .select(
-                "part_id",
-                F.coalesce("n_pages", F.lit(0)).cast("bigint").alias("n_pages"),
-                F.coalesce("n_ok", F.lit(0)).cast("bigint").alias("n_ok"),
-                F.coalesce("tok_errors", F.lit(0)).cast("bigint").alias("tok_errors"),
-                F.coalesce("tree_errors", F.lit(0)).cast("bigint").alias("tree_errors"),
-                F.coalesce("text_chars", F.lit(0)).cast("bigint").alias("text_chars"),
-                F.col("min_ts"), F.col("max_ts"))
-            .withColumn("num_parts", F.lit(num_parts)))
-        manifest.write.mode("append").parquet(manifest_path)
-        stats = manifest.agg(
-            F.count("*").alias("parts"), F.sum("n_pages").alias("pages")
-        ).collect()[0]
-        total_parts += stats["parts"] or 0
-        total_pages += stats["pages"] or 0
+        ).toArrow()
+        # PUBLISH: one append of the driver-side rows (an Arrow table is
+        # handed to the JVM as is — no Python task, no time zone round trip)
+        rows = _manifest_rows(audit, wave, num_parts)
+        spark.createDataFrame(rows).write.mode("append").parquet(manifest_path)
+        total_parts += rows.num_rows
+        total_pages += sum(rows["n_pages"].to_pylist())
     return {"parts_done": total_parts, "pages": total_pages}
 
 

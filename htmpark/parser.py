@@ -15,13 +15,17 @@ htmerl_sax_utf8.erl:132-136,3602-3608), whole-run ``#chars`` emission that
 bypasses tree dispatch (:3264-3265), and zero-copy slicing of the input str.
 
 Byte handling: input bytes are decoded UTF-8 with ``surrogateescape`` so
-invalid sequences round-trip byte-identically (the reference slices raw
-binaries in batch paths; per-char paths would crash Erlang on bad UTF-8 —
-our engine instead records ``tok_errors`` and continues; documented
-deviation D1).
+invalid sequences round-trip byte-identically through the parser (the
+reference slices raw binaries in batch paths; per-char paths would crash
+Erlang on bad UTF-8 — our engine continues; documented deviation D1).
 
 Deviations from the reference, all counted in ``errors`` and flagged:
-  D1  invalid UTF-8: reference crashes in per-char states; we continue.
+  D1  invalid UTF-8: reference crashes in per-char states; we continue on
+      the surrogate-escaped text, so ``Parser`` output round-trips the
+      bytes.  ``extract.extract_doc`` (the row a Spark task emits) replaces
+      each undecodable byte with U+FFFD in the row's strings, since a lone
+      surrogate cannot enter an Arrow batch, and counts one tok_error per
+      such byte; the page stays one row, never a dead task.
   D2  attributes/self-closing on END tags (``</p x>``): reference crashes
       with badrecord (htmerl_sax_utf8.erl:883-891 on #end_tag); we drop the
       attributes and count a tok_error.

@@ -1,5 +1,6 @@
 """Pipeline-level fixtures (FIXTURES.md §5): determinism, resume, skew."""
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -253,6 +254,103 @@ def test_wave_publish_bounds_redo(spark, tmp_out):
     assert spark.read.parquet(out + "/data").count() == N
 
 
+def _clustered_input(spark, path, n_files):
+    """400 small pages in SURT order, one hot host owning 3/4 of them,
+    written as ``n_files`` parquet files."""
+    pages = spark.range(0, 400, 1, n_files).selectExpr(
+        "concat('https://', CASE WHEN id < 300 THEN 'hot' ELSE "
+        "concat('tail', cast(id % 5 as string)) END, "
+        "'.example.com/p/', lpad(cast(id as string), 6, '0')) as url",
+        "timestamp'2025-01-01 00:00:00' as warc_ts",
+        "cast(concat('<p>page ', cast(id as string), repeat(' filler', 50),"
+        " '</p>') as binary) as html",
+        "'en' as lang")
+    (pages.sortWithinPartitions("url")
+          .write.option("parquet.block.size", 8 * 1024).parquet(path))
+    return spark.read.parquet(path)
+
+
+def _salted_width(df, **kw):
+    plan = (extract_pages(df, salt_buckets=8, **kw)
+            ._jdf.queryExecution().executedPlan().toString())
+    m = re.search(r"Exchange hashpartitioning\(.*, (\d+)\), REPARTITION_BY_NUM",
+                  plan)
+    assert m, plan
+    return int(m.group(1))
+
+
+def test_salted_exchange_sized_by_scan_splits(spark, tmp_out):
+    """The salted exchange takes max(defaultParallelism, scan splits) parse
+    tasks: every Python task carries a fixed cost, so a fixed multiple of
+    the slots would make a small input pay for tasks that carry almost
+    nothing, while a many-split input keeps one parse task per split."""
+    par = spark.sparkContext.defaultParallelism
+    few = _clustered_input(spark, os.path.join(tmp_out, "few"), 1)
+    assert few.rdd.getNumPartitions() < par
+    assert _salted_width(few) == par
+    # many small files under a small split target: Spark's byte-based
+    # sizing yields more splits than slots, and the exchange follows them
+    path = os.path.join(tmp_out, "many")
+    _clustered_input(spark, path, par + 4)
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "8k")
+    try:
+        many = spark.read.parquet(path)
+        splits = many.rdd.getNumPartitions()
+        assert splits > par
+        assert _salted_width(many) == splits
+        # a caller-pinned count still wins
+        assert _salted_width(many, num_partitions=5) == 5
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_run_extraction_job_shape(spark, tmp_out):
+    """One wave of a salted job is five Spark jobs: the salted exchange and
+    the partitioned write (AQE runs the exchange as its own job), the audit
+    aggregate collected to the driver (again two), and one manifest append.
+    A resume adds one manifest read; a finished job is that read alone.
+    The parse stage runs max(defaultParallelism, scan splits) tasks."""
+    from htmpark.job import detect_host_clustered
+
+    sc = spark.sparkContext
+    inp = _clustered_input(spark, os.path.join(tmp_out, "in"), 1)
+    assert detect_host_clustered(inp) is True  # the salted branch
+    out = os.path.join(tmp_out, "out")
+
+    def run(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            res = run_extraction(spark, inp, out, num_parts=4, publish_every=2,
+                                 **kw)
+        finally:
+            sc._jsc.clearJobGroup()
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        tasks = [tracker.getStageInfo(st).numTasks for j in jobs
+                 for st in tracker.getJobInfo(j).stageIds]
+        return res, len(jobs), max(tasks, default=0)
+
+    first, n_first, widest = run("shape-first", max_waves=1)
+    assert first["parts_done"] == 2
+    assert n_first <= 5
+    assert widest == sc.defaultParallelism  # 1 split -> the floor
+    rest, n_rest, _ = run("shape-resume")
+    assert rest["parts_done"] == 2 and first["pages"] + rest["pages"] == 400
+    assert n_rest <= 6
+    done, n_done, _ = run("shape-done")
+    assert done == {"parts_done": 0, "pages": 0} and n_done <= 1
+
+    man = spark.read.parquet(out + "/manifest")
+    assert man.count() == 4
+    assert man.agg(F.sum("n_pages")).collect()[0][0] == 400
+    # warc_ts bounds cross the driver exactly (every page has the same ts)
+    ts = inp.select("warc_ts").first()[0]
+    bounds = man.select("min_ts", "max_ts").distinct().collect()
+    assert [tuple(r) for r in bounds] == [(ts, ts)]
+
+
 def test_bucketed_join_is_exchange_free(spark, tmp_out):
     """write_bucketed pays the shuffle at write time: a join between two
     co-bucketed tables must contain NO Exchange in the plan (bucket i of
@@ -431,6 +529,9 @@ def test_poisoned_row_becomes_error_row(spark):
         ("u1", datetime.datetime(2025, 1, 1), b"<p>fine</p>", "en"),
         ("u2", datetime.datetime(2025, 1, 1), b"<frameset>", "en"),  # unfinished
         ("u3", datetime.datetime(2025, 1, 1), None, "en"),           # null html
+        # invalid UTF-8 (D1): must not kill the task's Arrow batch
+        ("u4", datetime.datetime(2025, 1, 1),
+         b"<title>t\xff</title><p>a\xfe\xc3(b <a href=/x\xff>l</a></p>", "en"),
     ]
     schema = StructType([
         StructField("url", StringType()), StructField("warc_ts", TimestampType()),
@@ -441,6 +542,15 @@ def test_poisoned_row_becomes_error_row(spark):
     assert out["u1"].parse_ok and out["u1"].text == "fine"
     assert not out["u2"].parse_ok
     assert not out["u3"].parse_ok and out["u3"].tree_errors >= 1
+    # one row; each undecodable byte is U+FFFD in its strings and counted
+    assert out["u4"].text == "t\ufffda\ufffd\ufffd(bl"
+    assert out["u4"].title == "t\ufffd"
+    assert out["u4"].outlinks == ["/x\ufffd"]
+    assert out["u4"].tok_errors == 4
+    # the minimal (url, html) input: absent warc_ts and lang come out null
+    bare = spark.createDataFrame([("u4", rows[3][2])], "url string, html binary")
+    (row,) = extract_pages(bare, salt_buckets=0).collect()
+    assert row.text == out["u4"].text and row.warc_ts is None and row.lang is None
 
 
 def test_main_text_strips_chrome():
