@@ -20,6 +20,7 @@ plan looks like at 10^12 rows.
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -1478,7 +1479,7 @@ def q_stream_windowed_counts(spark, sf_dir):
                .schema("event_id long, ts timestamp, user_id long, "
                        "event_type string, value double, props string")
                .parquet(src))
-        with _stream_parts(spark):
+        with _scoped_conf(spark, {_SHUFFLE_PARTS: _stream_parts(spark)}):
             q = (windowed_event_counts(sdf)
                  .writeStream.format("parquet").option("path", out)
                  .option("checkpointLocation", ck).outputMode("append")
@@ -1501,8 +1502,8 @@ def q_stream_windowed_counts(spark, sf_dir):
                     "event_type", "n_events", "value_cents"))
 
 
-def _stream_parts(spark, parts: int = 4):
-    """Context for the gate/bench streaming queries: a stateful streaming
+def _stream_parts(spark, parts: int = 4) -> int | None:
+    """Shuffle width for the gate/bench streaming queries: a stateful streaming
     query creates one state-store instance per shuffle partition at its
     FIRST micro-batch (fixed for the checkpoint's lifetime), and per-batch
     store open/commit dominates tiny bounded replays — A/B at sf0.1:
@@ -1515,27 +1516,15 @@ def _stream_parts(spark, parts: int = 4):
     opposite concern (partitions ~ stream volume / state per task);
     these gate queries start a FRESH checkpoint per call, so the scoped
     conf is the per-checkpoint sizing decision, not a global default.
-    Same session-global caveat as _no_aqe (registry path is sequential)."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def ctx():
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        try:
-            scoped = str(min(int(prev), parts))
-        except ValueError:
-            # deployments set this to "auto" (AQE-managed); there is no
-            # numeric value to clamp — skip the override rather than die
-            # before the stream starts
-            yield
-            return
-        spark.conf.set(key, scoped)
-        try:
-            yield
-        finally:
-            spark.conf.set(key, prev)
-    return ctx()
+    Same session-global caveat as the fixpoint loops' AQE toggle (see
+    _scoped_conf; the registry path is sequential)."""
+    try:
+        return min(int(spark.conf.get(_SHUFFLE_PARTS)), parts)
+    except ValueError:
+        # deployments set this to "auto" (AQE-managed); there is no
+        # numeric value to clamp — skip the override rather than die
+        # before the stream starts
+        return None
 
 
 def q_stream_click_attribution(spark, sf_dir):
@@ -1565,7 +1554,7 @@ def q_stream_click_attribution(spark, sf_dir):
                .schema("event_id long, ts timestamp, user_id long, "
                        "event_type string, value double, props string")
                .parquet(src))
-        with _stream_parts(spark):
+        with _scoped_conf(spark, {_SHUFFLE_PARTS: _stream_parts(spark)}):
             q = (click_attribution_stream(sdf)
                  .writeStream.format("parquet").option("path", out)
                  .option("checkpointLocation", ck).outputMode("append")
@@ -2079,37 +2068,85 @@ FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
 """
 
 
+# per-session shared state: every memoized node (candidate pairs,
+# collapsed dup edges, cluster labels, doc signals, frontier targets, the
+# seeded-BFS wave table, schedule cycle 1) and every un-memoized persisted
+# baseline label table lives in this ONE store, keyed
+# (id(spark), sf_dir, name).  It holds the PERSISTED node itself, so
+# teardown's unpersist frees the actual cached blocks.
+_SESSION_MEMO: dict = {}
+
+
+def session_memo(spark, sf_dir, name, build=None):
+    """The (session, sf_dir) memo ``name``, built by ``build()`` on a miss.
+
+    A lazy frame from ``build()`` is persisted and counted eagerly
+    (consumers iterate with AQE off, and the big DAG underneath should
+    build WITH AQE) and tagged ``_htmpark_rows`` — a free row bound for
+    loop partition sizing.  A frame ``build()`` already persisted is
+    stored as it is, with no extra job.  ``build=None`` only looks (None
+    on a miss).
+
+    Every lookup first evicts entries whose session has been stopped
+    (their cached blocks are gone with the executors), bounding the store
+    at (live sessions x sf_dirs x names); clear_candidate_pairs_cache()
+    frees everything explicitly."""
+    for k, df in list(_SESSION_MEMO.items()):
+        try:
+            stale = df.sparkSession.sparkContext._jsc.sc().isStopped()
+        except Exception:
+            stale = True
+        if stale:
+            del _SESSION_MEMO[k]
+    key = (id(spark), sf_dir, name)
+    df = _SESSION_MEMO.get(key)
+    if df is None and build is not None:
+        df = build()
+        if not df.is_cached:
+            df = df.persist()
+            df._htmpark_rows = df.count()
+        _SESSION_MEMO[key] = df
+    return df
+
+
+def clear_candidate_pairs_cache() -> None:
+    """Session-state teardown: unpersist every node in the session memo
+    and reclaim the gate streams' parquet sink dirs."""
+    import shutil
+
+    while _SESSION_MEMO:
+        try:
+            _SESSION_MEMO.popitem()[1].unpersist()
+        except Exception:
+            pass
+    while _STREAM_SINK_DIRS:
+        shutil.rmtree(_STREAM_SINK_DIRS.pop(), ignore_errors=True)
+
+
 # the candidate-pairs DAG (shingle -> minhash -> banding -> self-join) is
 # the most expensive subtree in the dedup family; its three consumers
 # (clusters, pagerank, curation) share ONE materialization per (session,
 # sf_dir) instead of each rebuilding it — the in-session equivalent of the
 # production pattern where `pairs` is written once and fanned out.
-_PAIRS_CACHE: dict = {}
-
-
 def candidate_pairs(spark, sf_dir) -> DataFrame:
     """Memoized + persisted MinHash candidate pairs.  The cached DataFrame
     is tiny (two bigints per candidate pair — banding keeps |pairs| near
     the true near-dup count, never all-pairs), so persisting it is safe at
-    any corpus size where clustering itself is feasible.  Entries whose
-    session has been stopped are evicted on the next call (their cached
-    blocks are gone with the executors), bounding the cache at
-    (live sessions x sf_dirs); clear_candidate_pairs_cache() frees
-    everything explicitly."""
-    _evict_stale(_PAIRS_CACHE)
-    key = (id(spark), sf_dir)
-    df = _PAIRS_CACHE.get(key)
-    if df is None:
-        df = q_dedup_minhash_pairs(spark, sf_dir).persist()
-        n = df.count()  # materialize eagerly: consumers iterate under
-        #                 _no_aqe, and the big banding DAG should build
-        #                 WITH AQE
-        df._htmpark_rows = n  # free row bound for loop partition sizing
-        _PAIRS_CACHE[key] = df
-    return df
+    any corpus size where clustering itself is feasible."""
+    return session_memo(spark, sf_dir, "pairs",
+                        lambda: q_dedup_minhash_pairs(spark, sf_dir))
 
 
-# fixpoint-loop shuffle sizing (r12, guide §2.2): inside a _no_aqe loop
+def _dup_edges(spark, sf_dir) -> DataFrame:
+    """Memoized + persisted collapsed dup-edge table (collapsed_dup_edges),
+    q_dedup_clusters' default input.  It reuses the member-level pair memo
+    IF another consumer already paid for it (rep-level semi-filter ==
+    re-banding the reps); it never builds full pairs just for this."""
+    return session_memo(spark, sf_dir, "edges", lambda: collapsed_dup_edges(
+        spark, sf_dir, pairs=session_memo(spark, sf_dir, "pairs")))
+
+
+# fixpoint-loop shuffle sizing (r12, guide §2.2): inside an AQE-off loop
 # AQE's partition coalescing is off, so every per-pass exchange
 # materializes the session's full spark.sql.shuffle.partitions even when
 # the loop's working set is bounded and tiny (a 96-host BFS frontier
@@ -2122,6 +2159,8 @@ def candidate_pairs(spark, sf_dir) -> DataFrame:
 # no-op.  Static loop sides (pre-partitioned persisted edge tables)
 # must be built at the SAME width or every pass re-shuffles them.
 _LOOP_ROWS_PER_PARTITION = 1 << 16
+_AQE = "spark.sql.adaptive.enabled"
+_SHUFFLE_PARTS = "spark.sql.shuffle.partitions"
 
 
 def _loop_partitions(spark, n_rows_bound) -> int | None:
@@ -2130,98 +2169,39 @@ def _loop_partitions(spark, n_rows_bound) -> int | None:
     if n_rows_bound is None:
         return None
     try:
-        cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        cur = int(spark.conf.get(_SHUFFLE_PARTS))
     except (TypeError, ValueError):
         return None
     return max(1, min(cur, -(-int(n_rows_bound) // _LOOP_ROWS_PER_PARTITION)))
 
 
-def _scoped_shuffle_partitions(spark, nparts: int | None):
-    """Context: spark.sql.shuffle.partitions = nparts inside, restored
-    after; no-op when nparts is None."""
-    from contextlib import contextmanager
+@contextmanager
+def _scoped_conf(spark, conf: dict):
+    """Context: each ``conf`` key set to its value inside, restored after;
+    a None value leaves its key alone.
 
-    @contextmanager
-    def ctx():
-        if nparts is None:
-            yield
-            return
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(int(nparts)))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return ctx()
-
-
-def _no_aqe(spark):
-    """Context for fixpoint loops: each pass re-joins the same tiny stable
-    tables, so AQE's per-stage re-optimization jobs (plus its per-pass
-    broadcast re-decisions) are pure scheduling overhead — A/B measured 2x
-    wall-clock on the CC loop at sf0.1.  The expensive DAG underneath
-    (candidate pairs) is always materialized BEFORE entering; everything a
-    caller sees afterwards is persisted/checkpointed, so the toggle never
-    leaks into downstream plans.
+    Fixpoint loops scope AQE off together with their loop width: each
+    pass re-joins the same tiny stable tables, so AQE's per-stage
+    re-optimization jobs (plus its per-pass broadcast re-decisions) are
+    pure scheduling overhead — A/B measured 2x wall-clock on the CC loop
+    at sf0.1.  The expensive DAG underneath (candidate pairs) is always
+    materialized BEFORE entering; everything a caller sees afterwards is
+    persisted/checkpointed, so the toggle never leaks into downstream
+    plans.
 
     Caveat: the conf is SESSION-global — a query planned concurrently on
     another thread of the same session during the loop would also see AQE
     off.  The registry's driver/bench path is sequential; concurrent
     callers should inject precomputed pairs/clusters and keep their own
     session."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def ctx():
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
-    return ctx()
-
-
-# cluster assignments are memoized the same way: the curation capstone and
-# any repeated dedup query reuse one CC fixpoint per (session, sf_dir)
-_CLUSTERS_CACHE: dict = {}
-_EDGES_CACHE: dict = {}
-# un-memoized persisted nodes (the star=False baseline's label tables) —
-# freed by clear_candidate_pairs_cache like the keyed caches
-_BASELINE_NODES: list = []
-
-
-def _evict_stale(cache: dict) -> None:
-    for k in list(cache):
-        try:
-            stale = cache[k].sparkSession.sparkContext._jsc.sc().isStopped()
-        except Exception:
-            stale = True
-        if stale:
-            del cache[k]
-
-
-def clear_candidate_pairs_cache() -> None:
-    """Session-cache teardown: unpersist every memoized DataFrame (each
-    cache stores the PERSISTED node itself, so unpersist frees the actual
-    cached blocks) and reclaim the gate streams' parquet sink dirs."""
-    import shutil
-
-    for cache in (_PAIRS_CACHE, _CLUSTERS_CACHE, _EDGES_CACHE,
-                  _FRONTIER_CACHE, _BFS_SEEDED_CACHE, _DOC_SIGNALS_CACHE):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        cache.clear()
-    while _BASELINE_NODES:
-        try:
-            _BASELINE_NODES.pop().unpersist()
-        except Exception:
-            pass
-    while _STREAM_SINK_DIRS:
-        shutil.rmtree(_STREAM_SINK_DIRS.pop(), ignore_errors=True)
+    prev = {k: spark.conf.get(k) for k, v in conf.items() if v is not None}
+    for k in prev:
+        spark.conf.set(k, str(conf[k]))
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def cc_star_labels(spark, pairs: DataFrame) -> DataFrame:
@@ -2297,7 +2277,7 @@ def cc_star_labels(spark, pairs: DataFrame) -> DataFrame:
     n_pairs = getattr(pairs, "_htmpark_rows", None)
     nparts = _loop_partitions(
         spark, 2 * n_pairs if n_pairs is not None else None)
-    with _no_aqe(spark), _scoped_shuffle_partitions(spark, nparts):
+    with _scoped_conf(spark, {_AQE: "false", _SHUFFLE_PARTS: nparts}):
         prev = _checksum(edges)
         while True:
             edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
@@ -2330,9 +2310,11 @@ def _label_prop_labels(spark, pairs: DataFrame,
     confirming pass is never charged against the budget; the first pass
     always counts as changing (the None sentinel — avoiding the up-front
     label-sum job is worth the one-pass overcount)."""
+    # edge rows: forward + reverse + one self-loop per vertex (<= 2 per
+    # pair), so up to 4 per pair
     n_pairs = getattr(pairs, "_htmpark_rows", None)
     nparts = _loop_partitions(
-        spark, 3 * n_pairs if n_pairs is not None else None)
+        spark, 4 * n_pairs if n_pairs is not None else None)
     fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     verts = (fwd.select("src")
              .union(fwd.select(F.col("dst").alias("src"))).distinct())
@@ -2351,7 +2333,7 @@ def _label_prop_labels(spark, pairs: DataFrame,
     # the loop exits after one cheap pass
     prev_sum = None
     changing = 0
-    with _no_aqe(spark), _scoped_shuffle_partitions(spark, nparts):
+    with _scoped_conf(spark, {_AQE: "false", _SHUFFLE_PARTS: nparts}):
         while True:
             new_labels = (edges.join(labels, edges.dst == labels.doc_id)
                           .groupBy("src")
@@ -2410,58 +2392,39 @@ def q_dedup_clusters(spark, sf_dir, pairs: DataFrame | None = None,
     doc_a, doc_b).  The default path builds the exact-collapsed edge set
     (member->rep + rep-level banding pairs — identical components to the
     full pair graph, m-1 edges instead of m^2/2 on a cluster of m
-    identical docs, see collapsed_dup_edges), reuses the per-session
-    pairs/edges memos, and memoizes the finished PERSISTED label table so
-    repeated consumers never re-run the fixpoint."""
-    use_memo = pairs is None and star is not False
-    if use_memo:
-        _evict_stale(_CLUSTERS_CACHE)
-        cached = _CLUSTERS_CACHE.get((id(spark), sf_dir))
-        if cached is not None:
-            # the memo holds the PERSISTED label node (so teardown's
-            # unpersist frees the real blocks; a cached projection would
-            # free nothing); re-derive the lazy output projection per hit
-            return cached.select("doc_id", "cluster_id")
-    if pairs is None:
-        _evict_stale(_EDGES_CACHE)
-        key = (id(spark), sf_dir)
-        pairs = _EDGES_CACHE.get(key)
-        if pairs is None:
-            # reuse the member-level pair memo IF another consumer already
-            # paid for it (rep-level semi-filter == re-banding the reps);
-            # never build full pairs just for this
-            paid = _PAIRS_CACHE.get(key)
-            pairs = collapsed_dup_edges(spark, sf_dir, pairs=paid).persist()
-            n = pairs.count()  # materialize WITH AQE, before _no_aqe loops
-            pairs._htmpark_rows = n  # row bound for loop partition sizing
-            _EDGES_CACHE[key] = pairs
+    identical docs, see collapsed_dup_edges) and takes it, and the
+    member-level pairs when another consumer already built them, from the
+    session memo (session_memo).  The finished PERSISTED label table is
+    memoized there too, so repeated consumers never re-run the fixpoint;
+    the persisted label tables of the un-memoized paths (``star=False``,
+    injected ``pairs``) are held in the same store under their own id, so
+    teardown frees them."""
+    def labels():
+        edges = pairs if pairs is not None else _dup_edges(spark, sf_dir)
+        if star is False:
+            # pure baseline; never memoized, so the equality tests always
+            # compare two independent computations
+            return _label_prop_labels(spark, edges)
+        if star == "auto":
+            lp = _label_prop_labels(spark, edges, max_passes=_LP_PASS_CAP)
+            if lp is not None:
+                # the persisted node already carries the final column
+                # names, so it IS the memoizable result — no second
+                # persisted copy
+                return lp
+            # still moving at the cap: deep graph -> star
+        return cc_star_labels(spark, edges)
 
-    if star is True:
-        result = cc_star_labels(spark, pairs)
-    elif star == "auto":
-        labels = _label_prop_labels(spark, pairs, max_passes=_LP_PASS_CAP)
-        if labels is None:  # still moving at the cap: deep graph -> star
-            result = cc_star_labels(spark, pairs)
-        else:
-            # the persisted node already carries the final column names,
-            # so it IS the memoizable result — no second persisted copy
-            if use_memo:
-                _CLUSTERS_CACHE[(id(spark), sf_dir)] = labels
-            else:
-                _BASELINE_NODES.append(labels)
-            return labels.select("doc_id", "cluster_id")
+    if pairs is None and star is not False:
+        # the memo holds the PERSISTED label node (so teardown's unpersist
+        # frees the real blocks; a cached projection would free nothing);
+        # re-derive the lazy output projection per hit
+        node = session_memo(spark, sf_dir, "clusters", labels)
     else:
-        # pure baseline; never memoized, so the equality tests always
-        # compare two independent computations
-        labels = _label_prop_labels(spark, pairs)
-        _BASELINE_NODES.append(labels)
-        return labels.select("doc_id", "cluster_id")
-
-    if use_memo:
-        result = result.persist()
-        result.count()
-        _CLUSTERS_CACHE[(id(spark), sf_dir)] = result
-    return result
+        node = labels()
+        if node.is_cached:  # a persisted label-prop table
+            session_memo(spark, sf_dir, id(node), lambda: node)
+    return node.select("doc_id", "cluster_id")
 
 
 SQL_DEDUP_CLUSTERS = f"""
@@ -2524,7 +2487,7 @@ def q_graph_pagerank(spark, sf_dir, iters: int = _PR_ITERS,
     verts = deg.select(F.col("src").alias("id")).persist()
     base = 15 * _PR_SCALE // 100
     ranks = verts.select("id", F.lit(_PR_SCALE).cast("bigint").alias("r"))
-    with _no_aqe(spark), _scoped_shuffle_partitions(spark, nparts):
+    with _scoped_conf(spark, {_AQE: "false", _SHUFFLE_PARTS: nparts}):
         for _ in range(iters):
             contrib = (ed.join(ranks, ed.src == ranks.id)
                        .select(F.col("dst"), F.expr("r div out_deg").alias("c"))
@@ -3063,23 +3026,42 @@ def _np_round_e4(c):
     return np.where(c < 0, -r, r)
 
 
-def _np_probe_broadcast(probes, id_col: str, vec_col: str):
+def _np_sorted_vectors(df, id_col: str, vec_col: str):
     """Collect a BOUNDED probe/centroid side (rows sorted by id — ties
     in every downstream ordering break toward the LOWEST id, and numpy
-    first-occurrence selection needs ascending ids for that) into a
-    (ids, mat_f64, sqnorm) broadcast.  Callers gate on the same
-    planning-time footer crossover that used to gate F.broadcast, so
-    the collect is the broadcast build the old plan did anyway."""
+    first-occurrence selection needs ascending ids for that) as
+    (int64 ids, float64 matrix); None when no rows come back, and the
+    scorer then short-circuits to an empty frame (_np_map)."""
     import numpy as np
 
-    rows = probes.select(id_col, vec_col).collect()
+    rows = df.select(id_col, vec_col).collect()
+    if not rows:
+        return None
     rows.sort(key=lambda r: r[0])
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([list(r[1]) for r in rows],
-                   dtype=np.float32).astype(np.float64)
-    sq = _np_fold_sqnorm(mat)
-    sc = probes.sparkSession.sparkContext
-    return sc.broadcast((ids, mat, sq))
+    return (np.array([r[0] for r in rows], dtype=np.int64),
+            np.array([list(r[1]) for r in rows],
+                     dtype=np.float32).astype(np.float64))
+
+
+def _np_probe_broadcast(probes, id_col: str, vec_col: str):
+    """A (ids, mat_f64, sqnorm) broadcast of the sorted probe/centroid
+    side, None when it is empty.  Callers gate on the same planning-time
+    footer crossover that used to gate F.broadcast, so the collect is the
+    broadcast build the old plan did anyway."""
+    vecs = _np_sorted_vectors(probes, id_col, vec_col)
+    if vecs is None:
+        return None
+    return probes.sparkSession.sparkContext.broadcast(
+        (*vecs, _np_fold_sqnorm(vecs[1])))
+
+
+def _np_map(df, bc, fn, schema: str) -> DataFrame:
+    """``df.mapInPandas(fn, schema)`` for a scorer over broadcast ``bc``;
+    an empty probe/centroid side (``bc`` None) has nothing to score and
+    short-circuits to an empty frame, as the pre-r12 join plan did."""
+    if bc is None:
+        return df.sparkSession.createDataFrame([], schema)
+    return df.mapInPandas(fn, schema)
 
 
 def _np_cosine_candidates(e, bc, *, top_n: int | None = None,
@@ -3129,8 +3111,8 @@ def _np_cosine_candidates(e, bc, *, top_n: int | None = None,
             yield pd.DataFrame({"probe_id": pids[jj], "vec_id": vids[ii],
                                 "cos": cos[ii, jj]})
 
-    return (_fan_out(e).select("vec_id", "embedding")
-            .mapInPandas(score, "probe_id long, vec_id long, cos double"))
+    return _np_map(_fan_out(e).select("vec_id", "embedding"), bc, score,
+                   "probe_id long, vec_id long, cos double")
 
 
 def _np_best_centroid(e, bc, emit: str) -> DataFrame:
@@ -3176,8 +3158,8 @@ def _np_best_centroid(e, bc, emit: str) -> DataFrame:
 
     schema = ("vec_id long, cent_id long, sq double" if emit == "assign"
               else "cent_id long, dim int, v_e4 long")
-    return (_fan_out(e).select("vec_id", "embedding")
-            .mapInPandas(assign, schema))
+    return _np_map(_fan_out(e).select("vec_id", "embedding"), bc, assign,
+                   schema)
 
 
 def _np_topcells(probes, bc, nprobe: int) -> DataFrame:
@@ -3214,8 +3196,8 @@ def _np_topcells(probes, bc, nprobe: int) -> DataFrame:
                                 "pe": pdf["pe"].to_numpy()[ii],
                                 "psq": psq[ii]})
 
-    return probes.mapInPandas(
-        f, "probe_id long, cent_id long, pe array<float>, psq double")
+    return _np_map(probes, bc, f,
+                   "probe_id long, cent_id long, pe array<float>, psq double")
 
 
 def q_dedup_embedding_cosine(spark, sf_dir,
@@ -3402,8 +3384,8 @@ def _np_quantized_candidates(e, bc, top_n: int) -> DataFrame:
             yield pd.DataFrame({"probe_id": pids[jj], "vec_id": vids[ii],
                                 "qdot": qdot[ii, jj]})
 
-    return (_fan_out(e).select("vec_id", "embedding")
-            .mapInPandas(score, "probe_id long, vec_id long, qdot long"))
+    return _np_map(_fan_out(e).select("vec_id", "embedding"), bc, score,
+                   "probe_id long, vec_id long, qdot long")
 
 
 def q_sim_quantized_topk(spark, sf_dir,
@@ -3434,15 +3416,10 @@ def q_sim_quantized_topk(spark, sf_dir,
         # r12 Arrow-native scorer: probes collected raw and quantized
         # with the SAME op sequence (_np_quantize == _quantize_expr),
         # int64 dot exact, per-task top-5 per probe, global rank below
-        import numpy as np
-
-        rows = (e.where(F.col("vec_id") % 100 == 0)
-                .select("vec_id", "embedding").collect())
-        rows.sort(key=lambda r: r[0])
-        pids = np.array([r[0] for r in rows], dtype=np.int64)
-        P64 = np.array([list(r[1]) for r in rows],
-                       dtype=np.float32).astype(np.float64)
-        bc = spark.sparkContext.broadcast((pids, _np_quantize(P64)))
+        vecs = _np_sorted_vectors(e.where(F.col("vec_id") % 100 == 0),
+                                  "vec_id", "embedding")
+        bc = None if vecs is None else spark.sparkContext.broadcast(
+            (vecs[0], _np_quantize(vecs[1])))
         scored = _np_quantized_candidates(e, bc, top_n=5)
     else:
         eq = (e.withColumn("_mx", _max_abs_expr(F.col("embedding")))
@@ -4413,10 +4390,7 @@ _LM_SLACK_CB = 20
 
 # the one-pass signal frame fans out to the curation capstone (and any
 # caller wanting precomputed signal columns) — one documents scan per
-# (session, sf_dir), same lifecycle as _BFS_SEEDED_CACHE
-_DOC_SIGNALS_CACHE: dict = {}
-
-
+# (session, sf_dir)
 def _doc_signals_cached(spark, sf_dir) -> DataFrame:
     """Memoized job.doc_signals frame over the sf_dir documents table:
     ONE scan of documents builds every curation signal column
@@ -4426,15 +4400,10 @@ def _doc_signals_cached(spark, sf_dir) -> DataFrame:
     and injectable into the standalone text gates (``signals=`` on
     q_text_quality_filter / q_text_repetition / q_text_unigram_lm) —
     in the session."""
-    _evict_stale(_DOC_SIGNALS_CACHE)
-    key = (id(spark), sf_dir)
-    df = _DOC_SIGNALS_CACHE.get(key)
-    if df is None:
-        from .job import doc_signals
+    from .job import doc_signals
 
-        df = doc_signals(spark, t(spark, sf_dir, "documents"))
-        _DOC_SIGNALS_CACHE[key] = df
-    return df
+    return session_memo(spark, sf_dir, "doc_signals", lambda: doc_signals(
+        spark, t(spark, sf_dir, "documents")))
 
 
 def q_curation_pipeline(spark, sf_dir, clusters: DataFrame | None = None,
@@ -6021,23 +5990,13 @@ def _frontier_targets(spark, sf_dir):
 # parse->resolve->canon pipeline), the in-session analogue of the
 # production pattern where each crawl wave's target list is WRITTEN
 # once (job.py's write-audit-publish sink) and every scheduler reads
-# it; same lifecycle as _PAIRS_CACHE (stale-session eviction +
-# clear_candidate_pairs_cache teardown)
-_FRONTIER_CACHE: dict = {}
-
-
+# it
 def frontier_targets(spark, sf_dir) -> DataFrame:
     """Memoized + persisted frontier target table (one row per
     (host_num, surt_key) with edge count + robots verdict), built by
     _frontier_targets on first use in a session."""
-    _evict_stale(_FRONTIER_CACHE)
-    key = (id(spark), sf_dir)
-    df = _FRONTIER_CACHE.get(key)
-    if df is None:
-        df = _frontier_targets(spark, sf_dir).persist()
-        df.count()
-        _FRONTIER_CACHE[key] = df
-    return df
+    return session_memo(spark, sf_dir, "frontier",
+                        lambda: _frontier_targets(spark, sf_dir))
 
 
 def frontier_rollup(spark, sf_dir) -> DataFrame:
@@ -6538,7 +6497,7 @@ def _bfs_edges(spark, sf_dir, nparts: int | None = None) -> DataFrame:
     (construction documented on q_web_crawl_bfs): distinct edges,
     pre-partitioned on src and persisted ONCE — only the frontier moves
     per wave.  Materialized (count) with AQE still on, before any
-    _no_aqe loop.  ``nparts`` (from _loop_partitions) pins the static
+    AQE-off loop.  ``nparts`` (from _loop_partitions) pins the static
     side to the LOOP's shuffle width so the per-wave join reuses this
     partitioning instead of re-shuffling the edges every pass.  Caller
     unpersists."""
@@ -6551,7 +6510,7 @@ def _bfs_edges(spark, sf_dir, nparts: int | None = None) -> DataFrame:
         .distinct())
     edges = (edges.repartition(nparts, F.col("src")) if nparts
              else edges.repartition(F.col("src"))).persist()
-    edges.count()  # materialize WITH AQE, before the _no_aqe loop
+    edges.count()  # materialize WITH AQE, before the AQE-off loop
     return edges
 
 
@@ -6574,7 +6533,7 @@ def _bfs_waves(spark, edges: DataFrame, dist: DataFrame,
     adds nothing to the loop."""
     frontier = dist.select("host")
     wave = 0
-    with _no_aqe(spark), _scoped_shuffle_partitions(spark, nparts):
+    with _scoped_conf(spark, {_AQE: "false", _SHUFFLE_PARTS: nparts}):
         while wave < max_waves:
             wave += 1
             joined = (frontier.join(edges, frontier["host"] == edges["src"])
@@ -6618,10 +6577,7 @@ FROM walk GROUP BY host
 
 # the seeded-BFS wave table fans out to the seeded-BFS driver surface
 # and the budget-paced scheduler — one loop execution per (session,
-# sf_dir), same lifecycle as _FRONTIER_CACHE
-_BFS_SEEDED_CACHE: dict = {}
-
-
+# sf_dir)
 def _seeded_bfs_dist(spark, sf_dir) -> DataFrame:
     """Memoized publisher-seeded BFS wave table (host, wave): seeds are
     every crawl-space host whose sitemap declared fetchable URLs the
@@ -6631,10 +6587,7 @@ def _seeded_bfs_dist(spark, sf_dir) -> DataFrame:
     SAME _bfs_waves loop as q_web_crawl_bfs assigns discovery depth.
     The seed frame is eagerly localCheckpoint-ed so the sitemap
     pipeline's lineage never enters the fixpoint loop."""
-    _evict_stale(_BFS_SEEDED_CACHE)
-    key = (id(spark), sf_dir)
-    df = _BFS_SEEDED_CACHE.get(key)
-    if df is None:
+    def build():
         seeds = (q_web_sitemap_coverage(spark, sf_dir)
                  .where((F.col("n_new_seeds") > 0)
                         & (F.col("host_num") < _BFS_HOSTS))
@@ -6647,8 +6600,8 @@ def _seeded_bfs_dist(spark, sf_dir) -> DataFrame:
                         nparts=nparts).persist()
         df.count()
         edges.unpersist()
-        _BFS_SEEDED_CACHE[key] = df
-    return df
+        return df
+    return session_memo(spark, sf_dir, "bfs_seeded", build)
 
 
 def q_web_crawl_bfs_seeded(spark, sf_dir):
@@ -6902,12 +6855,10 @@ def q_web_crawl_schedule_cycle2(spark, sf_dir):
     the consumer's seed both read the one materialized table (r11
     verdict item 3: the lazy plan used to be evaluated twice at gate
     scale), the in-session analogue of the production planner that
-    persists each cycle's schedule table between planning runs.  The
-    persisted node is tracked for teardown like the label tables."""
-    c1 = q_web_crawl_schedule(spark, sf_dir,
-                              horizon=_SCHED_CYCLE_HORIZON).persist()
-    c1.count()  # materialize: both consumers below must hit the cache
-    _BASELINE_NODES.append(c1)
+    persists each cycle's schedule table between planning runs.  Cycle 1
+    is a session memo, so repeated calls plan and count it once."""
+    c1 = session_memo(spark, sf_dir, "schedule_cycle1", lambda: (
+        q_web_crawl_schedule(spark, sf_dir, horizon=_SCHED_CYCLE_HORIZON)))
     return c1.unionByName(next_schedule_cycle(c1, _SCHED_CYCLE_HORIZON))
 
 

@@ -379,14 +379,15 @@ def test_clusters_memoized_per_session(spark):
 
     clear_candidate_pairs_cache()
     a = q_dedup_clusters(spark, SF)
-    node1 = qm._CLUSTERS_CACHE[(id(spark), SF)]
+    key = (id(spark), SF, "clusters")
+    node1 = qm._SESSION_MEMO[key]
     b = q_dedup_clusters(spark, SF)
-    assert qm._CLUSTERS_CACHE[(id(spark), SF)] is node1  # fixpoint ran once
+    assert qm._SESSION_MEMO[key] is node1  # fixpoint ran once
     assert "InMemoryTableScan" in \
         b._jdf.queryExecution().executedPlan().toString()
     injected = q_dedup_clusters(spark, SF,
                                 pairs=q_dedup_minhash_pairs(spark, SF))
-    assert qm._CLUSTERS_CACHE[(id(spark), SF)] is node1
+    assert qm._SESSION_MEMO[key] is node1
     assert ({(r.doc_id, r.cluster_id) for r in injected.collect()}
             == {(r.doc_id, r.cluster_id) for r in a.collect()})
     clear_candidate_pairs_cache()
@@ -1083,7 +1084,7 @@ def test_stream_parts_guards_non_numeric_conf():
     Spark rejects conf.set("auto") but managed runtimes inject it at
     session build) must not crash the gate stream queries: the scoped
     clamp is skipped, nothing is written back."""
-    from htmpark.queries import _stream_parts
+    from htmpark.queries import _SHUFFLE_PARTS, _scoped_conf, _stream_parts
 
     class FakeConf:
         def __init__(self):
@@ -1101,7 +1102,7 @@ def test_stream_parts_guards_non_numeric_conf():
         conf = FakeConf()
 
     fs = FakeSpark()
-    with _stream_parts(fs):
+    with _scoped_conf(fs, {_SHUFFLE_PARTS: _stream_parts(fs)}):
         assert fs.conf.value == "auto"
     assert fs.conf.value == "auto" and fs.conf.writes == []
 
@@ -1113,14 +1114,15 @@ def test_session_cache_teardown_frees_real_nodes(spark, tmp_path):
 
     qm.clear_candidate_pairs_cache()
     qm.q_dedup_clusters(spark, SF)
-    key = (id(spark), SF)
-    cached = qm._CLUSTERS_CACHE[key]
+    cached = qm._SESSION_MEMO[(id(spark), SF, "clusters")]
     assert cached.storageLevel.useMemory  # the node unpersist() acts on
 
     # the star=False baseline's persisted label table is un-memoized but
     # must still queue for teardown
+    before = set(qm._SESSION_MEMO)
     qm.q_dedup_clusters(spark, SF, star=False)
-    assert qm._BASELINE_NODES and qm._BASELINE_NODES[-1].storageLevel.useMemory
+    baseline = [qm._SESSION_MEMO[k] for k in set(qm._SESSION_MEMO) - before]
+    assert len(baseline) == 1 and baseline[0].storageLevel.useMemory
 
     fake = tmp_path / "dead_sink"
     fake.mkdir()
@@ -1128,8 +1130,126 @@ def test_session_cache_teardown_frees_real_nodes(spark, tmp_path):
     qm.clear_candidate_pairs_cache()
     assert not fake.exists()
     assert not qm._STREAM_SINK_DIRS
-    assert not qm._CLUSTERS_CACHE and not qm._PAIRS_CACHE
-    assert not qm._BASELINE_NODES
+    assert not qm._SESSION_MEMO
+
+
+class _FakeFrame:
+    """Just enough of a DataFrame for session_memo: a session that can
+    be stopped, the ``is_cached`` flag, and a counted persist."""
+
+    def __init__(self, stopped=False, cached=False):
+        from types import SimpleNamespace as NS
+
+        sc = NS(isStopped=lambda: stopped)
+        self.sparkSession = NS(sparkContext=NS(_jsc=NS(sc=lambda: sc)))
+        self.is_cached = cached
+        self.counts = 0
+
+    def persist(self):
+        self.is_cached = True
+        return self
+
+    def count(self):
+        self.counts += 1
+        return 7
+
+
+def test_session_memo_evicts_stopped_sessions():
+    """A memo entry whose session has stopped is dropped on the next
+    session_memo lookup (its cached blocks are gone with the executors)
+    while a live entry survives; build=None only looks; a lazy build is
+    persisted, counted once and tagged with its rows, and an already
+    persisted build is stored as it is, with no count."""
+    from htmpark import queries as qm
+
+    owner = object()
+    saved = dict(qm._SESSION_MEMO)
+    qm._SESSION_MEMO.clear()
+    try:
+        dead, live = _FakeFrame(stopped=True), _FakeFrame()
+        qm._SESSION_MEMO[(id(owner), "sf", "dead")] = dead
+        qm._SESSION_MEMO[(id(owner), "sf", "live")] = live
+        assert qm.session_memo(owner, "sf", "live") is live
+        assert set(qm._SESSION_MEMO) == {(id(owner), "sf", "live")}
+        assert qm.session_memo(owner, "sf", "missing") is None
+        assert (id(owner), "sf", "missing") not in qm._SESSION_MEMO
+
+        lazy = _FakeFrame()
+        assert qm.session_memo(owner, "sf", "lazy", lambda: lazy) is lazy
+        assert qm.session_memo(owner, "sf", "lazy", lambda: None) is lazy
+        assert lazy.is_cached and lazy.counts == 1
+        assert lazy._htmpark_rows == 7
+        done = _FakeFrame(cached=True)
+        assert qm.session_memo(owner, "sf", "done", lambda: done) is done
+        assert done.counts == 0 and not hasattr(done, "_htmpark_rows")
+    finally:
+        qm._SESSION_MEMO.clear()
+        qm._SESSION_MEMO.update(saved)
+
+
+def test_schedule_cycle2_holds_one_cycle1_node(spark):
+    """q_web_crawl_schedule_cycle2 memoizes its persisted cycle-1 table:
+    repeated calls in one session hold ONE node with the same rows, and
+    teardown unpersists it."""
+    from htmpark import queries as qm
+
+    qm.clear_candidate_pairs_cache()
+    a = sorted(map(tuple, qm.q_web_crawl_schedule_cycle2(spark, SF).collect()))
+    b = sorted(map(tuple, qm.q_web_crawl_schedule_cycle2(spark, SF).collect()))
+    assert a == b and a
+    nodes = [v for k, v in qm._SESSION_MEMO.items()
+             if k[2] == "schedule_cycle1"]
+    assert len(nodes) == 1 and nodes[0].storageLevel.useMemory
+    qm.clear_candidate_pairs_cache()
+    assert not nodes[0].storageLevel.useMemory
+
+
+def test_broadcast_scorers_empty_probe_side(spark, tmp_path):
+    """An embeddings table with no probe rows (no vec_id % 100 == 0) and
+    no centroid rows (no vec_id % 50 == 7) takes the broadcast regime
+    (the footer bound is 0) and must return an empty result from every
+    Arrow-native scorer, as the pre-r12 join plans did, instead of
+    raising on the empty collected side."""
+    from htmpark import queries as qm
+
+    d = str(tmp_path)
+    spark.createDataFrame(
+        [(i, [float(i), 1.0, -2.0, 0.5]) for i in range(1, 7)],
+        "vec_id long, embedding array<float>",
+    ).coalesce(1).write.parquet(f"{d}/embeddings.parquet")
+    e = qm.t(spark, d, "embeddings")
+    assert qm._np_probe_broadcast(e.limit(0), "vec_id", "embedding") is None
+    assert qm._np_cosine_candidates(e, None, top_n=5).collect() == []
+    for q in (qm.q_dedup_embedding_cosine, qm.q_sim_topk_bruteforce,
+              qm.q_sim_quantized_topk, qm.q_sim_ivf_topk,
+              qm.q_sim_kmeans_update):
+        assert q(spark, d).collect() == [], q.__name__
+
+
+def test_label_prop_loop_width_covers_edge_rows(spark):
+    """_label_prop_labels sizes its loop width from its edge table's row
+    bound: forward + reverse + one self-loop per vertex is up to 4 rows
+    per pair.  At 20,000 pairs 3x rounds to 1 partition and 4x to 2, so
+    the static edge side and the label table must be 2 wide."""
+    import re
+
+    from htmpark import queries as qm
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)],
+                                  "doc_a long, doc_b long")
+    pairs._htmpark_rows = 20_000
+    assert qm._loop_partitions(spark, 3 * 20_000) == 1
+    assert qm._loop_partitions(spark, 4 * 20_000) == 2
+    labels = qm._label_prop_labels(spark, pairs)
+    try:
+        plan = labels._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"hashpartitioning\(dst#\d+L, 2\), "
+                         r"REPARTITION_BY_NUM", plan)
+        assert labels.rdd.getNumPartitions() == 2
+        assert sorted(map(tuple, labels.collect())) == [
+            (1, 1), (2, 1), (3, 1), (5, 5), (6, 5)]
+    finally:
+        labels.unpersist()
 
 
 def test_pack_sequences_two_phase_prefix_sum(spark):
@@ -2474,13 +2594,13 @@ def test_fingerprints_fold_transitive_helpers():
     names = ["curation_pipeline", "dedup_minhash_pairs",
              "web_crawl_schedule", "web_sitemap_coverage"]
     before = {n: cro.fingerprint(*Q.REGISTRY[n]) for n in names}
-    Q._PAIRS_CACHE[("fp-test",)] = object()
-    Q._DOC_SIGNALS_CACHE[("fp-test",)] = object()
+    Q._SESSION_MEMO[("fp-test", "pairs")] = object()
+    Q._SESSION_MEMO[("fp-test", "doc_signals")] = object()
     try:
         after = {n: cro.fingerprint(*Q.REGISTRY[n]) for n in names}
     finally:
-        Q._PAIRS_CACHE.pop(("fp-test",), None)
-        Q._DOC_SIGNALS_CACHE.pop(("fp-test",), None)
+        Q._SESSION_MEMO.pop(("fp-test", "pairs"), None)
+        Q._SESSION_MEMO.pop(("fp-test", "doc_signals"), None)
     assert before == after
 
     # the query module itself is never folded as text: otherwise every

@@ -59,7 +59,7 @@ FPRINT_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
 def _const_repr(v):
     """Deterministic repr for an IMMUTABLE plain-data constant, else
     None.  Mutable containers (list/set/dict) are deliberately
-    excluded (r10 review): a session cache like _PAIRS_CACHE hashes
+    excluded (r10 review): a session store like _SESSION_MEMO hashes
     differently between an empty-cache fresh process and a post-gate
     in-process --update (filled caches hold DataFrames, whose dicts
     used to silently drop the fragment), making fingerprints
