@@ -13,6 +13,15 @@ Performance model (SURVEY.md §4): batched run scanning via compiled regexes
 (the analogue of ``find_stop``/``binary:compile_pattern``,
 htmerl_sax_utf8.erl:132-136,3602-3608), whole-run ``#chars`` emission that
 bypasses tree dispatch (:3264-3265), and zero-copy slicing of the input str.
+The per-tag cost is Python calls, not scanning, so common tags take one
+fused tag step: in the data state, a whole simple tag (``_RE_FAST_TAG``: a
+lowercase name with quoted or plain unquoted, charref-free attributes; or a
+plain ``</name>``) is matched in one regex call and handed straight to
+``TreeBuilder.start_tag`` / ``end_tag``, which call ``_in_body`` directly in
+IN_BODY.  Any other tag shape (uppercase, charrefs, valueless or spaced
+attributes, ``<!``, ``<?``) and every tag in RCDATA/RAWTEXT/script data
+takes the tokenizer machine; a fused tag in any other insertion mode, or
+one whose in-body rule redoes (``</html>``), takes ``TreeBuilder.dispatch``.
 
 Byte handling: input bytes are decoded UTF-8 with ``surrogateescape`` so
 invalid sequences round-trip byte-identically through the parser (the
@@ -317,13 +326,22 @@ class TreeBuilder:
         self._do_pop_tag(name)
 
     def pop_all_to_tag(self, name) -> None:
-        """pop_all_to_tag (:3365-3381): no-op unless open; else pop through."""
+        """pop_all_to_tag (:3365-3381): no-op unless open; else pop through.
+
+        A plain HTML name other than ``html`` is _pop_one + do_pop_tag's
+        last clause, inlined; ``html`` and foreign names take _do_pop_tag."""
         els = self.open_elements
         if name not in els:
             return
+        end_element = self.sink.end_element
         while els:
-            top = els[-1]
-            self._pop_one()
+            top = els.pop()
+            if type(top) is str and top != "html":
+                if top == "pre":
+                    self.pre_depth -= 1
+                end_element(HTML_NS, top)
+            else:
+                self._do_pop_tag(top)
             if top == name:
                 return
 
@@ -417,6 +435,19 @@ class TreeBuilder:
         self.finished = True
 
     # ---- dispatch ----
+
+    def start_tag(self, name: str, attrs, closing: bool, off: int) -> None:
+        """The tree half of the fused tag step (Parser._st_data): a start
+        tag in IN_BODY goes straight to _in_body; any other mode, and a
+        redo (mode changed), goes through dispatch."""
+        self.cur_off = off
+        if self.mode != IN_BODY or self._in_body(T_START, name, attrs, closing):
+            self.dispatch(T_START, name, attrs, closing)
+
+    def end_tag(self, name: str) -> None:
+        """End-tag twin of start_tag (``</html>`` redoes in AFTER_BODY)."""
+        if self.mode != IN_BODY or self._in_body(T_END, name, None, None):
+            self.dispatch(T_END, name)
 
     def dispatch(self, kind: int, a=None, b=None, c=None, off: int = -1) -> None:
         """Token router.  a/b/c payloads:
@@ -676,9 +707,25 @@ class TreeBuilder:
             return False
         if kind == T_START:
             code = _BODY_START_CODE.get(a, 0)
+            if code == 4 or code == 9:
+                # block/formatting start (:2221-2270) or void (:2406-2419):
+                # add_html_element inlined, as the commonest in-body token
+                if self.text:
+                    self.maybe_pop_text()
+                self.last_off = self.cur_off
+                sink = self.sink
+                sink.start_element(HTML_NS, a, self._make_atts("html", b) if b else [])
+                if c or code == 9:
+                    sink.end_element(HTML_NS, a)
+                else:
+                    self.open_elements.append(a)
+                    if a == "pre":
+                        self.pre_depth += 1
+                return False
             if code == 0:
                 # unknown tag: added in current namespace (:2493-2503)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 ns = self.ns_stack[-1] if self.ns_stack else "html"
                 if ns == "html":
                     self.add_html_element(a, b, c)
@@ -687,120 +734,127 @@ class TreeBuilder:
                 else:
                     self.add_svg_element(a, b, c)
                 return False
-            if code == 4:  # block/formatting start (:2221-2270)
-                self.maybe_pop_text()
-                self.add_html_element(a, b, c)
-                return False
-            if code == 9:  # void (:2406-2419)
-                self.maybe_pop_text()
-                self.add_html_element(a, b, True)
-                return False
             if code == 1:  # html/body/frameset: ignored, Q23 (:2164-2169)
                 return False
             if code == 2:  # head text tags (:2170-2182)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 self.add_html_element(a, b, c)
                 self.orig_mode = IN_BODY
                 self.mode = TEXT
                 return False
             if code == 3:  # head void + template (:2192-2203)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 self._redisp(IN_HEAD, kind, a, b, c, restore=IN_BODY)
                 return False
             if code == 5:  # headings (:2271-2294, Q17)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 cur = self._current()
                 if cur in _HEADINGS:
                     self.pop_all_to_tag(cur)
                 self.add_html_element(a, b, c)
                 return False
             if code == 6:  # li/dd/dt (:2295-2309, Q17)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 if self._current() == a:
                     self.pop_all_to_tag(a)
                 self.add_html_element(a, b, c)
                 return False
             if code == 7:  # table (:2392-2395)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 self.add_html_element(a, b, c)
                 self.mode = IN_TABLE
                 return False
             if code == 8:  # image -> img, Q19 (:2404-2405)
                 return self._in_body(T_START, "img", b, c)
             if code == 10:  # body text tags (:2420-2432)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 self.add_html_element(a, b, c)
                 self.orig_mode = IN_BODY
                 self.mode = TEXT
                 return False
             if code == 11:  # select (:2433-2436)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 self.add_html_element(a, b, c)
                 self.mode = IN_SELECT
                 return False
             if code == 12:  # optgroup/option (:2437-2446)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 if self._current() == "option":
                     self.pop_all_to_tag("option")
                 self.add_html_element(a, b, c)
                 return False
             if code == 13:  # rb/rtc (:2447-2457)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 if self._is_open("ruby"):
                     self.generate_implied_end_tags()
                 self.add_html_element(a, b, c)
                 return False
             if code == 14:  # rp/rt (:2458-2468)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 if self._is_open("ruby"):
                     self.generate_implied_end_tags("rtc")
                 self.add_html_element(a, b, c)
                 return False
             if code == 15:  # math (:2469-2473)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 self.sink.start_prefix_mapping("", MATH_NS)
                 self.add_math_element(a, b, c)
                 return False
             if code == 16:  # svg (:2474-2478)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 self.sink.start_prefix_mapping("", SVG_NS)
                 self.add_svg_element(a, b, c)
                 return False
             return False  # code 17: stray table tags dropped (:2479-2492)
         if kind == T_END:
             code = _BODY_END_CODE.get(a, 0)
+            if code == 5 or code == 7 or code == 1:
+                # block/formatting end (Q12) or head text tags (:2183-2191);
+                # pop_all_to_tag is itself a no-op unless a is open
+                if self.text:
+                    self.maybe_pop_text()
+                self.pop_all_to_tag(a)
+                return False
             if code == 0:
                 # catch-all end tag: pop by current namespace (:2504-2513)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 ns = self.ns_stack[-1] if self.ns_stack else "html"
                 self.pop_all_to_tag(a if ns == "html" else (ns, a))
                 return False
-            if code == 5 or code == 7:  # block/formatting end (Q12)
-                self.maybe_pop_text()
-                if self._is_open(a):
-                    self.pop_all_to_tag(a)
-                return False
             if code == 6:  # </p>, Q18 (:2346-2356)
-                self.maybe_pop_text()
-                if not self._is_open("p"):
+                if self.text:
+                    self.maybe_pop_text()
+                if "p" not in self.open_elements:
                     self.add_html_element("p", [], False, implied=True)
                 self.pop_all_to_tag("p")
                 return False
-            if code == 1:  # head text tags (:2183-2191)
-                self.maybe_pop_text()
-                self.pop_all_to_tag(a)
-                return False
             if code == 2:  # template (:2204-2207)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 self._redisp(IN_HEAD, kind, a, b, c, restore=IN_BODY)
                 return False
             if code == 3:  # </body> (:2211-2215)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 self.pop_all_to_tag("body")
                 self.mode = AFTER_BODY
                 return False
             if code == 4:  # </html> (:2216-2220)
-                self.maybe_pop_text()
+                if self.text:
+                    self.maybe_pop_text()
                 self.pop_all_to_tag("body")
                 self.mode = AFTER_BODY
                 return True
@@ -1373,8 +1427,12 @@ class Parser:
 
     def _st_data(self, s: str, pos: int):
         n = len(s)
-        chars = self.tb.chars
+        tb = self.tb
+        chars = tb.chars
+        line_to = self._line_to
         search = _RE_DATA.search
+        fast_tag = _RE_FAST_TAG.match
+        fast_end_tag = _RE_FAST_END_TAG.match
         while True:
             if pos >= n:
                 return self._emit_eof()
@@ -1382,13 +1440,36 @@ class Parser:
             if c == "&":
                 pos = self._charref(s, pos + 1, False)
             elif c == "<":
+                # the fused tag step: a whole simple tag (_RE_FAST_TAG, or
+                # a plain `</name>`) goes straight from here to the tree
+                # builder, doing what _emit_tag would; every other '<'
+                # takes _tag_open and the machine
+                m = fast_tag(s, pos + 1)
+                if m is not None:
+                    name, atts, slash = m.groups()
+                    end = m.end()
+                    self.last_start = name
+                    line_to(end)
+                    tb.start_tag(name, _fast_attrs(atts) if atts else [],
+                                 slash == "/" or name in VOID_ELEMENTS, pos)
+                    pos = end
+                    if name in _DATAFN:
+                        self.datafn = _DATAFN[name]
+                        return pos
+                    continue
+                m = fast_end_tag(s, pos + 1)
+                if m is not None:
+                    pos = m.end()
+                    line_to(pos)
+                    tb.end_tag(m.group(1))
+                    continue
                 pos = self._tag_open(s, pos + 1)
                 if pos is None:
                     return None
                 if self.datafn != DATA:
                     return pos
             else:
-                self._line_to(pos)
+                line_to(pos)
                 m = search(s, pos)
                 end = m.start() if m else n
                 chars(s[pos:end])
@@ -1823,25 +1904,6 @@ class Parser:
             if c == "/":
                 return self._end_tag_open(s, pos + 1)
             if "a" <= c <= "z" or "A" <= c <= "Z":
-                # fast path: a complete simple start tag — lowercase name,
-                # zero+ double-quoted charref-free attributes, optional '/'.
-                # The pattern is a strict SUBSET of the machine's grammar
-                # (verified by the differential property test), so matched
-                # tags behave identically; anything else falls through.
-                m = _RE_FAST_TAG.match(s, pos)
-                if m is not None:
-                    self.tok_is_end = False
-                    self.tok_name = m.group(1)
-                    self.tok_selfclosing = m.group(3) == "/"
-                    if m.group(2):
-                        self.tok_attrs = [
-                            [a.group(1), a.group(2)]
-                            for a in _RE_FAST_ATTR.finditer(m.group(2))
-                        ]
-                    else:
-                        self.tok_attrs = []
-                    self._emit_tag(m.end())
-                    return m.end()
                 self.tok_is_end = False
                 self.tok_name = ""
                 self.tok_selfclosing = False
@@ -1858,17 +1920,6 @@ class Parser:
         if pos < n:
             c = s[pos]
             if "a" <= c <= "z" or "A" <= c <= "Z":
-                # fast path: plain `</name>`
-                m = _RE_LOWER_NAME.match(s, pos)
-                if m is not None:
-                    e = m.end()
-                    if e < n and s[e] == ">":
-                        self.tok_is_end = True
-                        self.tok_name = m.group()
-                        self.tok_selfclosing = False
-                        self.tok_attrs = []
-                        self._emit_tag(e + 1)
-                        return e + 1
                 self.tok_is_end = True
                 self.tok_name = ""
                 self.tok_selfclosing = False
@@ -2475,14 +2526,29 @@ _TAG_TERM = frozenset(" \t\n\f/>\x00")
 
 _RE_LOWER_NAME = re.compile(r"[a-z][a-z0-9]*")
 
-# whole-tag fast path (subset grammar; see _tag_open): name, simple
-# dq-quoted attrs without charrefs/NUL/quotes, optional self-closing slash
+# The fused tag step's grammar (see Parser._st_data), matched just after the
+# '<'.  A start tag: lowercase name; zero+ attributes, each whitespace then
+# a lowercase name, '=' and a value that is double- or single-quoted without
+# charref/NUL/its quote, or unquoted without whitespace, '&', '>', NUL, any
+# quote, '=', '<' or '`' (and ending at whitespace or '>': an unquoted value
+# keeps a trailing '/', as the machine's does); then an optional
+# self-closing '/'.  An end tag: `</name>` with a lowercase name.  Both are
+# strict SUBSETS of the machine's grammar (checked by
+# tests/test_fastpath_differential.py), so a matched tag yields the same
+# token; anything else falls through to the machine.
 _RE_FAST_TAG = re.compile(
     r'([a-z][a-z0-9]*)'
-    r'((?:[ \t\n\f]+[a-z][a-z0-9-]*="[^"&\x00]*")*)'
+    r'((?:[ \t\n\f]+[a-z][a-z0-9-]*='
+    r'''(?:"[^"&\x00]*"|'[^'&\x00]*'|[^ \t\n\f&>\x00"'=<`]+(?=[ \t\n\f>])))*)'''
     r'[ \t\n\f]*(/?)>'
 )
-_RE_FAST_ATTR = re.compile(r'([a-z][a-z0-9-]*)="([^"]*)"')
+_RE_FAST_END_TAG = re.compile(r"/([a-z][a-z0-9]*)>")
+_RE_FAST_ATTR = re.compile(r'''([a-z][a-z0-9-]*)=(?:"([^"]*)"|'([^']*)'|([^ \t\n\f]+))''')
+
+
+def _fast_attrs(src: str) -> list:
+    """(name, value) pairs of a _RE_FAST_TAG attribute run, in order."""
+    return [(n, dq or sq or unq) for n, dq, sq, unq in _RE_FAST_ATTR.findall(src)]
 
 
 def _scan_tag_name(s: str, pos: int, n: int):
