@@ -729,6 +729,8 @@ def doc_signals(spark: SparkSession, docs: DataFrame) -> DataFrame:
     text)."""
     from pyspark import StorageLevel
 
+    from .queries import _fan_out
+
     # re-parallelize BEFORE caching: the sandbox documents table is one
     # parquet split, and every signal leg (bigram explode, LM explode +
     # joins) would inherit that 1-task parallelism from the cached scan
@@ -736,11 +738,8 @@ def doc_signals(spark: SparkSession, docs: DataFrame) -> DataFrame:
     # partitioning set where the expansion happens, not after it).  The
     # shuffle moves the small pre-explode projection once; at cluster
     # scale the scan already carries >= cluster parallelism and the
-    # repartition is skipped (same rule as _fan_out / _shingles).
-    base = docs.select("doc_id", "text")
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < par:
-        base = base.repartition(par)
+    # repartition is skipped.
+    base = _fan_out(docs.select("doc_id", "text"))
     base = base.persist(StorageLevel.MEMORY_AND_DISK)
     sig = _doc_signals_build(base).persist(StorageLevel.MEMORY_AND_DISK)
     sig.count()
@@ -773,12 +772,11 @@ def write_doc_signals(spark: SparkSession, docs: DataFrame, path: str,
     materialization), pinned by test_doc_signals_one_pass_and_values."""
     from pyspark import StorageLevel
 
-    base = docs.select("doc_id", "text")
+    from .queries import _fan_out
+
     # same under-partitioned-input guard as doc_signals: the signal
     # legs' explodes must not inherit a 1-split scan's parallelism
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < par:
-        base = base.repartition(par)
+    base = _fan_out(docs.select("doc_id", "text"))
     if not cache_source:
         write_table(_doc_signals_build(base), path, "parquet", mode=mode)
         return

@@ -9,9 +9,12 @@ runs on the same parquet tables (CORRECTNESS_r{N}.json gate).  Design rules:
   (2dp inputs scale exactly), similarity scores are rounded-then-cast ints,
   set overlaps are exact integer counts, and hashes are md5 hex strings —
   bit-identical across engines.
-* Spark side stays JVM-only (built-in functions, broadcast hints for dims,
-  exploded joins instead of UDFs) except the HTML queries, whose parse is
-  the engine's vectorized mapInPandas core.
+* Spark side prefers built-in functions, broadcast hints for dims and
+  exploded joins.  Row-local Python (the HTML parse, per-document
+  hashing and tokenizing, robots/sitemap parsing, media decode) runs in
+  ONE map stage, _map_rows; only the whole-batch numpy scorers
+  (_np_map) and idn_ascii_urls' batch pass-through call mapInPandas
+  themselves.
 
 Scale notes per query are inline: what shuffles, what broadcasts, what the
 plan looks like at 10^12 rows.
@@ -23,6 +26,7 @@ import re
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -67,14 +71,14 @@ def _parquet_files(path: str) -> list:
 
 
 def _probe_rows_upper_bound(sf_dir: str, name: str, id_col: str,
-                            k: int) -> int | None:
-    """Sound planning-time UPPER BOUND on rows with ``id_col % k == 0``,
+                            k: int, r: int = 0) -> int | None:
+    """Sound planning-time UPPER BOUND on rows with ``id_col % k == r``,
     from parquet row-group min/max statistics (footer-only — never a Spark
     job or a data scan).  Per row group the bound is
-    ``min(num_rows, #multiples-of-k in [min, max])``; the second term is
+    ``min(num_rows, #ids ≡ r (mod k) in [min, max])``; the second term is
     valid because ``id_col`` is the table KEY (distinct — declared by the
-    table contract), so a row group cannot hold more multiple-of-k ROWS
-    than its id range offers multiple-of-k VALUES.  Dense, sparse, and
+    table contract), so a row group cannot hold more such ROWS than its
+    id range offers such VALUES.  Dense, sparse, and
     skewed id spaces are all bounded soundly — this replaces the r8-era
     ``n // k`` estimate whose dense-id assumption could under-count the
     probe set by up to k× and mis-pick the broadcast regime.  On dense ids
@@ -111,9 +115,10 @@ def _probe_rows_upper_bound(sf_dir: str, name: str, id_col: str,
                 if (st is None or not st.has_min_max
                         or st.min is None or st.max is None):
                     return None
-                lo, hi = int(st.min), int(st.max)
-                # multiples of k in [lo, hi]: floor(hi/k) - ceil(lo/k) + 1
-                # (Python floor division is sign-correct for both terms)
+                lo, hi = int(st.min) - r, int(st.max) - r
+                # ids ≡ r in [lo+r, hi+r] = multiples of k in [lo, hi]:
+                # floor(hi/k) - ceil(lo/k) + 1 (Python floor division is
+                # sign-correct for both terms)
                 mult = hi // k - -(-lo // k) + 1
                 total += max(0, min(g.num_rows, mult))
         return total
@@ -209,36 +214,33 @@ _WRAP_STRUCT = (
 )
 
 
-def _parse_docs(spark, sf_dir, pre: str, post: str) -> DataFrame:
-    """Wrap documents.text in HTML (JVM-side concat) and run the engine's
-    vectorized parse.  At scale this is the flagship plan: columnar scan ->
-    salted shuffle -> mapInPandas; here the input is small enough that the
-    wrap stays in the scan stage."""
-    import pandas as pd
+def _wrapped_docs(spark, sf_dir, wrap: tuple) -> DataFrame:
+    """(doc_id, page): documents.text inside the ``(pre, post)`` HTML
+    wrapper (JVM-side concat), fanned out — the sandbox documents table
+    is ONE split, and without the guard the whole Python parse ran in a
+    single task at sf1.0 (r12)."""
+    pre, post = wrap
+    return _fan_out(t(spark, sf_dir, "documents").select(
+        "doc_id", F.concat(F.lit(pre), F.col("text"), F.lit(post))
+        .alias("page")))
 
-    docs = _fan_out(t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(F.lit(pre), F.col("text"), F.lit(post)).alias("page"),
-    ))  # r12: the sandbox documents table is ONE split — without the
-    #     guard the whole Python parse ran in a single task at sf1.0
 
-    def run(batches):
-        from .extract import extract_doc
+def _parse_docs(spark, sf_dir, wrap: tuple, schema: str) -> DataFrame:
+    """The engine's parse over the wrapped documents (_wrapped_docs):
+    ``schema`` is ``doc_id`` followed by the extract_doc fields to emit
+    (e.g. ``"doc_id long, text string"``), and only those leave the
+    stage.  At scale this is the flagship plan: columnar scan -> salted
+    shuffle -> mapInPandas; here the input is small enough that the wrap
+    stays in the scan stage."""
+    from .extract import extract_doc
 
-        for pdf in batches:
-            out = [extract_doc(h.encode("utf-8")) for h in pdf["page"]]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "text": [r["text"] for r in out],
-                "main_text": [r["main_text"] for r in out],
-                "n_elements": pd.array([r["n_elements"] for r in out], dtype="int32"),
-                "n_text_nodes": pd.array([r["n_text_nodes"] for r in out], dtype="int32"),
-                "parse_ok": [r["parse_ok"] for r in out],
-            })
+    keys = StructType.fromDDL(schema).names[1:]
 
-    schema = ("doc_id long, text string, main_text string, n_elements int, "
-              "n_text_nodes int, parse_ok boolean")
-    return docs.mapInPandas(run, schema)
+    def run(did, page):
+        r = extract_doc(page.encode("utf-8"))
+        yield (did, *[r[k] for k in keys])
+
+    return _map_rows(_wrapped_docs(spark, sf_dir, wrap), run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -246,8 +248,7 @@ def _parse_docs(spark, sf_dir, pre: str, post: str) -> DataFrame:
 
 def q_html_parse_extract(spark, sf_dir):
     """Flagship: byte-identical extraction through the full engine path."""
-    pre, post = _WRAP_PLAIN
-    return _parse_docs(spark, sf_dir, pre, post).select("doc_id", "text")
+    return _parse_docs(spark, sf_dir, _WRAP_PLAIN, "doc_id long, text string")
 
 
 SQL_HTML_PARSE_EXTRACT = "SELECT doc_id, text FROM documents"
@@ -255,8 +256,7 @@ SQL_HTML_PARSE_EXTRACT = "SELECT doc_id, text FROM documents"
 
 def q_html_parse_entities(spark, sf_dir):
     """Entity decoding + charref quirks through the distributed path."""
-    pre, post = _WRAP_ENTITY
-    return _parse_docs(spark, sf_dir, pre, post).select("doc_id", "text")
+    return _parse_docs(spark, sf_dir, _WRAP_ENTITY, "doc_id long, text string")
 
 
 SQL_HTML_PARSE_ENTITIES = "SELECT doc_id, '< ' || text || ' & A' AS text FROM documents"
@@ -264,9 +264,9 @@ SQL_HTML_PARSE_ENTITIES = "SELECT doc_id, '< ' || text || ' & A' AS text FROM do
 
 def q_html_node_stats(spark, sf_dir):
     """Structural counts + boilerplate strip (nav dropped from main_text)."""
-    pre, post = _WRAP_STRUCT
-    return _parse_docs(spark, sf_dir, pre, post).select(
-        "doc_id", "n_elements", "n_text_nodes", "main_text")
+    return _parse_docs(spark, sf_dir, _WRAP_STRUCT,
+                       "doc_id long, n_elements int, n_text_nodes int, "
+                       "main_text string")
 
 
 SQL_HTML_NODE_STATS = """
@@ -293,39 +293,19 @@ def q_html_node_table(spark, sf_dir):
     columns.  The multi-line wrapper yields a deterministic 11-node shape
     per document, so the oracle reconstructs it exactly — including the
     per-node line numbers."""
-    import pandas as pd
+    from .parser import Parser
+    from .sinks import NodeTableSink
 
-    pre, post = _WRAP_NODETAB
-    docs = _fan_out(t(spark, sf_dir, "documents").select(
-        "doc_id", F.concat(F.lit(pre), F.col("text"),
-                           F.lit(post)).alias("page")))
+    def run(did, page):
+        sink = NodeTableSink()
+        Parser().parse(page.encode("utf-8"), sink)
+        for nid, pid, kind, name, _ns, _at, text, depth, span, line in sink.rows:
+            yield did, nid, pid, kind, name, depth, text, span, line
 
-    def run(batches):
-        from .parser import Parser
-        from .sinks import NodeTableSink
-
-        for pdf in batches:
-            out = {"doc_id": [], "node_id": [], "parent_id": [], "kind": [],
-                   "name": [], "depth": [], "text": [], "span_start": [],
-                   "line": []}
-            for did, page in zip(pdf["doc_id"], pdf["page"]):
-                sink = NodeTableSink()
-                Parser().parse(page.encode("utf-8"), sink)
-                for nid, pid, kind, name, ns, attrs, text, depth, span, line in sink.rows:
-                    out["doc_id"].append(did)
-                    out["node_id"].append(nid)
-                    out["parent_id"].append(pid)
-                    out["kind"].append(kind)
-                    out["name"].append(name)
-                    out["depth"].append(depth)
-                    out["text"].append(text)
-                    out["span_start"].append(span)
-                    out["line"].append(line)
-            yield pd.DataFrame(out)
-
-    schema = ("doc_id long, node_id int, parent_id int, kind string, "
-              "name string, depth int, text string, span_start int, line int")
-    return docs.mapInPandas(run, schema)
+    return _map_rows(
+        _wrapped_docs(spark, sf_dir, _WRAP_NODETAB), run,
+        "doc_id long, node_id int, parent_id int, kind string, name string, "
+        "depth int, text string, span_start int, line int")
 
 
 SQL_HTML_NODE_TABLE = """
@@ -356,6 +336,21 @@ def _corpus_n_pages(n_docs: int) -> int:
     return max(500, n_docs * 2 // 5)
 
 
+def _corpus_pages(spark, sf_dir) -> DataFrame:
+    """The synthetic web corpus (corpus.synthesize_pages) at
+    _corpus_n_pages of the documents table.  Sandbox scaffolding: the
+    oracle needs a page count that is a pure function of the SF, derived
+    from footer metadata (no Spark job); the count() fallback only fires
+    for non-parquet inputs (``is None``, not falsy — a legitimately empty
+    table must not launch a count job)."""
+    from .corpus import synthesize_pages
+
+    n_docs = _table_num_rows(sf_dir, "documents")
+    if n_docs is None:
+        n_docs = t(spark, sf_dir, "documents").count()
+    return synthesize_pages(spark, _corpus_n_pages(n_docs))
+
+
 def q_html_sax_events(spark, sf_dir):
     """The SAX event stream itself as an exploded Spark table: one row per
     event with (seq, event kind, local name, text payload, tokenizer line)
@@ -363,42 +358,25 @@ def q_html_sax_events(spark, sf_dir):
     multi-line wrapper yields a deterministic 20-event stream per document
     (only event 12's characters payload varies), so the oracle reconstructs
     it exactly including per-event line numbers."""
-    import pandas as pd
+    from . import parse_events
 
-    pre, post = _WRAP_NODETAB
-    docs = _fan_out(t(spark, sf_dir, "documents").select(
-        "doc_id", F.concat(F.lit(pre), F.col("text"),
-                           F.lit(post)).alias("page")))
+    def run(did, page):
+        pairs, _tb = parse_events(page.encode("utf-8"), with_lines=True)
+        for i, (ev, ln) in enumerate(pairs):
+            if isinstance(ev, str):
+                kind, name, text = ev, "", ""
+            elif ev[0] in ("startElement", "endElement"):
+                kind, name, text = ev[0], ev[2], ""
+            elif ev[0] in ("characters", "comment"):
+                kind, name, text = ev[0], "", ev[1]
+            else:
+                kind, name, text = ev[0], "", ""
+            yield did, i, kind, name, text, ln
 
-    def run(batches):
-        import htmpark
-
-        for pdf in batches:
-            out = {"doc_id": [], "seq": [], "event": [], "name": [],
-                   "text": [], "line": []}
-            for did, page in zip(pdf["doc_id"], pdf["page"]):
-                pairs, _tb = htmpark.parse_events(page.encode("utf-8"),
-                                                  with_lines=True)
-                for i, (ev, ln) in enumerate(pairs):
-                    if isinstance(ev, str):
-                        kind, name, text = ev, "", ""
-                    elif ev[0] in ("startElement", "endElement"):
-                        kind, name, text = ev[0], ev[2], ""
-                    elif ev[0] in ("characters", "comment"):
-                        kind, name, text = ev[0], "", ev[1]
-                    else:
-                        kind, name, text = ev[0], "", ""
-                    out["doc_id"].append(did)
-                    out["seq"].append(i)
-                    out["event"].append(kind)
-                    out["name"].append(name)
-                    out["text"].append(text)
-                    out["line"].append(ln)
-            yield pd.DataFrame(out)
-
-    schema = ("doc_id long, seq int, event string, name string, "
-              "text string, line int")
-    return docs.mapInPandas(run, schema)
+    return _map_rows(
+        _wrapped_docs(spark, sf_dir, _WRAP_NODETAB), run,
+        "doc_id long, seq int, event string, name string, text string, "
+        "line int")
 
 
 SQL_HTML_SAX_EVENTS = """
@@ -443,24 +421,8 @@ def q_html_outlinks(spark, sf_dir):
     wrapper's first href carries &amp; inside the attribute value).  The
     array column explodes JVM-side (posexplode) after the vectorized
     parse."""
-    import pandas as pd
-
-    pre, post = _WRAP_LINKS
-    docs = _fan_out(t(spark, sf_dir, "documents").select(
-        "doc_id", F.concat(F.lit(pre), F.col("text"),
-                           F.lit(post)).alias("page")))
-
-    def run(batches):
-        from .extract import extract_doc
-
-        for pdf in batches:
-            out = {"doc_id": [], "outlinks": []}
-            for did, page in zip(pdf["doc_id"], pdf["page"]):
-                out["doc_id"].append(did)
-                out["outlinks"].append(extract_doc(page.encode("utf-8"))["outlinks"])
-            yield pd.DataFrame(out)
-
-    parsed = docs.mapInPandas(run, "doc_id long, outlinks array<string>")
+    parsed = _parse_docs(spark, sf_dir, _WRAP_LINKS,
+                         "doc_id long, outlinks array<string>")
     return parsed.select(
         "doc_id", F.posexplode("outlinks").alias("link_idx", "outlink"))
 
@@ -483,27 +445,9 @@ def q_html_meta(spark, sf_dir):
     robots/noindex curation gate (job.drop_noindex) reads.  The wrapper
     puts the document text inside an attribute value, so attribute-value
     tokenization is part of the checked path."""
-    import pandas as pd
-
-    pre, post = _WRAP_META
-    docs = _fan_out(t(spark, sf_dir, "documents").select(
-        "doc_id", F.concat(F.lit(pre), F.col("text"),
-                           F.lit(post)).alias("page")))
-
-    def run(batches):
-        from .extract import extract_doc
-
-        for pdf in batches:
-            out = {"doc_id": [], "meta_names": [], "meta_contents": []}
-            for did, page in zip(pdf["doc_id"], pdf["page"]):
-                r = extract_doc(page.encode("utf-8"))
-                out["doc_id"].append(did)
-                out["meta_names"].append(r["meta_names"])
-                out["meta_contents"].append(r["meta_contents"])
-            yield pd.DataFrame(out)
-
-    parsed = docs.mapInPandas(
-        run, "doc_id long, meta_names array<string>, meta_contents array<string>")
+    parsed = _parse_docs(
+        spark, sf_dir, _WRAP_META,
+        "doc_id long, meta_names array<string>, meta_contents array<string>")
     z = F.posexplode(F.arrays_zip("meta_names", "meta_contents"))
     return (parsed.select("doc_id", z.alias("seq", "m"))
             .select("doc_id", "seq",
@@ -534,18 +478,9 @@ def q_html_corpus_pipeline(spark, sf_dir):
     error counters (generated by tools/gen_corpus_oracle.py, re-derived
     live in tests), and the oracle SQL reconstructs the whole per-host
     rollup from them."""
-    from .corpus import synthesize_pages
     from .job import extract_pages
 
-    # sandbox scaffolding: the oracle needs a page count that is a pure
-    # function of the SF, derived from footer metadata (no Spark job);
-    # the count() fallback only fires for non-parquet inputs (`is None`,
-    # not falsy — a legitimately empty table must not launch a count job)
-    n_docs = _table_num_rows(sf_dir, "documents")
-    if n_docs is None:
-        n_docs = t(spark, sf_dir, "documents").count()
-    pages = synthesize_pages(spark, _corpus_n_pages(n_docs))
-    out = extract_pages(pages, salt_buckets=8)
+    out = extract_pages(_corpus_pages(spark, sf_dir), salt_buckets=8)
     host = F.parse_url(F.col("url"), F.lit("HOST"))
     return (
         out.groupBy(host.alias("host"))
@@ -574,39 +509,20 @@ def q_html_headings(spark, sf_dir):
     10^12 pages, pre-bucket the node table by url and the join is
     exchange-free.  Oracle: heading texts are per-fragment '{i}'
     templates (generated constants, validated across digit lengths)."""
-    import pandas as pd
-
     from pyspark.sql.window import Window
 
-    from .corpus import synthesize_pages
+    from .parser import Parser
+    from .sinks import NodeTableSink
 
-    # footer-metadata row count, same rationale as q_html_corpus_pipeline
-    n_docs = _table_num_rows(sf_dir, "documents")
-    if n_docs is None:
-        n_docs = t(spark, sf_dir, "documents").count()
-    pages = synthesize_pages(spark, _corpus_n_pages(n_docs)).select("url", "html")
+    def run(url, html):
+        sink = NodeTableSink()
+        Parser().parse(bytes(html), sink)
+        for nid, pid, kind, name, _ns, _at, text, _d, _s, _ln in sink.rows:
+            yield url, nid, pid, kind, name, text
 
-    def run(batches):
-        from .parser import Parser
-        from .sinks import NodeTableSink
-
-        for pdf in batches:
-            out = {"url": [], "node_id": [], "parent_id": [], "kind": [],
-                   "name": [], "text": []}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                sink = NodeTableSink()
-                Parser().parse(bytes(html), sink)
-                for nid, pid, kind, name, _ns, _at, text, _d, _s, _ln in sink.rows:
-                    out["url"].append(url)
-                    out["node_id"].append(nid)
-                    out["parent_id"].append(pid)
-                    out["kind"].append(kind)
-                    out["name"].append(name)
-                    out["text"].append(text)
-            yield pd.DataFrame(out)
-
-    nodes = pages.mapInPandas(run, ("url string, node_id int, parent_id int, "
-                                    "kind string, name string, text string"))
+    nodes = _map_rows(_corpus_pages(spark, sf_dir).select("url", "html"), run,
+                      "url string, node_id int, parent_id int, kind string, "
+                      "name string, text string")
     h = (nodes.where((F.col("kind") == "element")
                      & F.col("name").rlike("^h[1-6]$"))
               .select("url", F.col("node_id").alias("h_id"), "name"))
@@ -1401,34 +1317,19 @@ def q_pdf_parse_extract(spark, sf_dir):
     Scale: identical shape to the HTML flagship — columnar scan ->
     mapInPandas -> columns; stateless per document, fuses with the scan,
     salting/partitioning rules inherited from the pipeline."""
-    import pandas as pd
+    from .pdftext import extract_pdf_text, synthesize_pdf
 
-    d = _fan_out(t(spark, sf_dir, "documents").select("doc_id", "text"))
+    def run(did, tx):
+        if tx is None:  # no text -> no document; error row, no crash
+            yield did, None, 0, False
+            return
+        r = extract_pdf_text(synthesize_pdf(tx, compress=(did % 2 == 0),
+                                            tj_array=(did % 4 == 1)))
+        yield did, r["text"], r["n_pages"], r["parse_ok"]
 
-    def run(batches):
-        from .pdftext import extract_pdf_text, synthesize_pdf
-
-        for pdf in batches:
-            texts, pages, oks = [], [], []
-            for did, tx in zip(pdf["doc_id"], pdf["text"]):
-                if tx is None:  # no text -> no document; error row, no crash
-                    texts.append(None)
-                    pages.append(0)
-                    oks.append(False)
-                    continue
-                blob = synthesize_pdf(tx, compress=(did % 2 == 0),
-                                      tj_array=(did % 4 == 1))
-                r = extract_pdf_text(blob)
-                texts.append(r["text"])
-                pages.append(r["n_pages"])
-                oks.append(r["parse_ok"])
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"], "text": texts,
-                "n_pages": pd.array(pages, dtype="int32"),
-                "parse_ok": oks})
-
-    return d.mapInPandas(
-        run, "doc_id long, text string, n_pages int, parse_ok boolean")
+    return _map_rows(
+        _fan_out(t(spark, sf_dir, "documents").select("doc_id", "text")), run,
+        "doc_id long, text string, n_pages int, parse_ok boolean")
 
 
 SQL_PDF_PARSE_EXTRACT = """
@@ -1899,46 +1800,27 @@ def _minhash_sig_from(docs: DataFrame) -> DataFrame:
     and (a*h + b) % P stays far inside int64 (a,b < 2^11, h < 2^30).
     Docs with fewer than _SHINGLE_W words carry no signature, as
     before."""
+    import hashlib
+
     import numpy as np
-    import pandas as pd
 
-    spark = docs.sparkSession
-    d = docs.select("doc_id", "text")
-    par = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < par:
-        d = d.repartition(par)
-    n_perm = len(_MH_AB)
+    A = np.array([a for a, _ in _MH_AB], dtype=np.int64)[:, None]
+    B = np.array([b for _, b in _MH_AB], dtype=np.int64)[:, None]
 
-    def sig(batches):
-        import hashlib
-
-        A = np.array([a for a, _ in _MH_AB], dtype=np.int64)[:, None]
-        B = np.array([b for _, b in _MH_AB], dtype=np.int64)[:, None]
-        w_ = _SHINGLE_W
-        for pdf in batches:
-            ids, mins = [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                w = text.split(" ")
-                n = len(w) - w_ + 1
-                if n <= 0:
-                    continue
-                hs = np.fromiter(
-                    (int(hashlib.md5(
-                        " ".join(w[i:i + w_]).encode("utf-8")
-                     ).hexdigest()[:15], 16) for i in range(n)),
-                    dtype=np.int64, count=n) % _MH_P
-                mins.append(((A * hs[None, :] + B) % _MH_P).min(axis=1))
-                ids.append(did)
-            m = (np.stack(mins) if ids
-                 else np.zeros((0, n_perm), dtype=np.int64))
-            out = {"doc_id": np.array(ids, dtype=np.int64)}
-            for i in range(n_perm):
-                out[f"mh{i}"] = m[:, i]
-            yield pd.DataFrame(out)
+    def sig(did, text):
+        w = text.split(" ")
+        n = len(w) - _SHINGLE_W + 1
+        if n <= 0:
+            return
+        hs = np.fromiter(
+            (int(hashlib.md5(" ".join(w[i:i + _SHINGLE_W]).encode("utf-8")
+                             ).hexdigest()[:15], 16) for i in range(n)),
+            dtype=np.int64, count=n) % _MH_P
+        yield did, *((A * hs[None, :] + B) % _MH_P).min(axis=1).tolist()
 
     schema = "doc_id long, " + ", ".join(
-        f"mh{i} long" for i in range(n_perm))
-    return d.mapInPandas(sig, schema)
+        f"mh{i} long" for i in range(len(_MH_AB)))
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), sig, schema)
 
 
 def q_dedup_minhash_sig(spark, sf_dir):
@@ -2551,28 +2433,20 @@ def q_dedup_simhash(spark, sf_dir):
     mapInPandas stage — md5 per DISTINCT word per doc weighted by its
     count (identical integer votes: sum over occurrences of
     ascii-parity ±1 == count-weighted sum over distinct words)."""
-    import pandas as pd
+    import hashlib
+    from collections import Counter
 
-    d = _fan_out(t(spark, sf_dir, "documents").select("doc_id", "text"))
+    def simhash(did, text):
+        votes = [0] * 16
+        for word, n in Counter(text.split(" ")).items():
+            h = hashlib.md5(word.encode("utf-8")).hexdigest()
+            for j in range(16):
+                votes[j] += n * ((ord(h[j]) % 2) * 2 - 1)
+        yield did, sum(1 << j for j in range(16) if votes[j] > 0)
 
-    def simhash(batches):
-        import hashlib
-        from collections import Counter
-
-        for pdf in batches:
-            ids, sims = [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                votes = [0] * 16
-                for word, n in Counter(text.split(" ")).items():
-                    h = hashlib.md5(word.encode("utf-8")).hexdigest()
-                    for j in range(16):
-                        votes[j] += n * ((ord(h[j]) % 2) * 2 - 1)
-                ids.append(did)
-                sims.append(sum(1 << j for j in range(16) if votes[j] > 0))
-            yield pd.DataFrame({"doc_id": pd.array(ids, dtype="int64"),
-                                "simhash16": pd.array(sims, dtype="int32")})
-
-    return d.mapInPandas(simhash, "doc_id long, simhash16 int")
+    return _map_rows(
+        _fan_out(t(spark, sf_dir, "documents").select("doc_id", "text")),
+        simhash, "doc_id long, simhash16 int")
 
 
 SQL_DEDUP_SIMHASH = """
@@ -2623,31 +2497,17 @@ def q_dedup_ngram_jaccard(spark, sf_dir,
     # materialization instead of re-running the stage (the pre-r12 plan
     # reused the distinct's exchange the same way).  n_a / n_b ride the
     # rows as constant-per-doc grouping keys — zero extra joins.
-    import pandas as pd
+    def shingle_sets(did, text):
+        w = text.split(" ")
+        uniq = {" ".join(w[i:i + _SHINGLE_W])
+                for i in range(len(w) - _SHINGLE_W + 1)}
+        for sh in uniq:
+            yield did, sh, len(uniq)
 
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
-
-    def shingle_sets(batches):
-        w_ = _SHINGLE_W
-        for pdf in batches:
-            ids, shs, ns = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                w = text.split(" ")
-                n = len(w) - w_ + 1
-                if n <= 0:
-                    continue
-                uniq = {" ".join(w[i:i + w_]) for i in range(n)}
-                ids.extend([did] * len(uniq))
-                shs.extend(uniq)
-                ns.extend([len(uniq)] * len(uniq))
-            yield pd.DataFrame({"doc_id": ids, "shingle": shs, "n_sh": ns})
-
-    d = (docs.mapInPandas(shingle_sets,
-                          "doc_id long, shingle string, n_sh long")
-         .localCheckpoint(eager=False))
+    d = _map_rows(
+        _fan_out(t(spark, sf_dir, "documents").select("doc_id", "text")),
+        shingle_sets, "doc_id long, shingle string, n_sh long",
+    ).localCheckpoint(eager=False)
     probes = d.where(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("probe_id"), "shingle",
         F.col("n_sh").alias("n_a"))
@@ -2886,6 +2746,41 @@ def _fan_out(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
     return df
+
+
+# pandas dtype per DDL type for _map_rows' output columns: nullable
+# extension types for ints and booleans, object for everything else
+_ROW_DTYPES = {"int": "Int32", "bigint": "Int64", "boolean": "boolean"}
+
+
+def _map_rows(df: DataFrame, fn, schema: str) -> DataFrame:
+    """THE row-local Python stage: one mapInPandas over ``df`` in which
+    ``fn(*row)`` gets each row's values in ``df``'s column order and
+    yields zero or more tuples in ``schema`` order.  A row may expand,
+    filter itself out, or emit None in any column (nullable dtypes), and
+    a batch whose rows all yield nothing still comes out typed.  The
+    per-row overhead is the one generator call; the batch loop, the
+    column transposition and the dtype casts live here once.  Fan-out is
+    the caller's choice (_fan_out or its own repartition), so the plan
+    of every call site is its own."""
+    out_cols = [(f.name, _ROW_DTYPES.get(f.dataType.simpleString(), object))
+                for f in StructType.fromDDL(schema).fields]
+    cols = df.columns
+
+    def run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [out for row in zip(*(pdf[c].tolist() for c in cols))
+                    for out in fn(*row)]
+            out = {}
+            for i, (name, dt) in enumerate(out_cols):
+                v = [r[i] for r in rows]
+                out[name] = (pd.Series(v, dtype=object) if dt is object
+                             else pd.array(v, dtype=dt))
+            yield pd.DataFrame(out)
+
+    return df.mapInPandas(run, schema)
 
 
 def _lsh_bucket_expr(col, n_bits: int = _LSH_BITS):
@@ -3571,6 +3466,16 @@ def resolve_sql(sql, sf_dir: str):
     return sql(sf_dir) if callable(sql) else sql
 
 
+def _centroids_fit_broadcast(sf_dir) -> bool:
+    """Broadcast-regime gate of the IVF / k-means centroid set
+    (``vec_id % 50 == 7``): a SOUND footer bound on its size
+    (_probe_rows_upper_bound with remainder 7), never a dense-id guess —
+    ``n // 50`` under-counts a table whose ids cluster on the centroid
+    residue.  Unknown scale (None) keeps the max_by plan."""
+    b = _probe_rows_upper_bound(sf_dir, "embeddings", "vec_id", 50, 7)
+    return b is not None and b <= _MAX_BROADCAST_PROBES
+
+
 def q_sim_ivf_topk(spark, sf_dir, nprobe: int = 2):
     """IVF (inverted-file) ANN: the coarse-quantizer scale path.
 
@@ -3608,8 +3513,7 @@ def q_sim_ivf_topk(spark, sf_dir, nprobe: int = 2):
     e = t(spark, sf_dir, "embeddings")
     cents = e.where(F.col("vec_id") % 50 == 7).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"))
-    n_rows = _table_num_rows(sf_dir, "embeddings")
-    if n_rows is not None and n_rows // 50 + 1 <= _MAX_BROADCAST_PROBES:
+    if _centroids_fit_broadcast(sf_dir):
         bc = _np_probe_broadcast(cents, "cent_id", "ce")
         assign = _np_best_centroid(e, bc, "assign").join(e, "vec_id")
         probes = e.where(F.col("vec_id") % 100 == 0).select(
@@ -3737,8 +3641,7 @@ def q_sim_kmeans_update(spark, sf_dir):
     e = t(spark, sf_dir, "embeddings")
     cents = e.where(F.col("vec_id") % 50 == 7).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"))
-    n_rows = _table_num_rows(sf_dir, "embeddings")
-    if n_rows is not None and n_rows // 50 + 1 <= _MAX_BROADCAST_PROBES:
+    if _centroids_fit_broadcast(sf_dir):
         comp = _np_best_centroid(
             e, _np_probe_broadcast(cents, "cent_id", "ce"), "msters")
         return (comp.groupBy("cent_id", "dim")
@@ -3978,22 +3881,14 @@ def q_text_bpe_tokens(spark, sf_dir):
     lowest-rank-first) over the table's own distinct words, joined back
     per word in SQL.  Gate-scale only by construction (the VALUES list
     is the distinct vocabulary); the engine path has no such bound."""
-    import pandas as pd
+    from .bpe import encode_text
 
-    d = _fan_out(t(spark, sf_dir, "documents").select("doc_id", "text"))
+    def run(did, txt):
+        yield did, *encode_text(txt)
 
-    def run(batches):
-        from .bpe import encode_text
-
-        for pdf in batches:
-            pairs = [encode_text(txt) for txt in pdf["text"]]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_tokens": pd.array([p[0] for p in pairs], dtype="int64"),
-                "id_sum": pd.array([p[1] for p in pairs], dtype="int64"),
-            })
-
-    return d.mapInPandas(run, "doc_id long, n_tokens bigint, id_sum bigint")
+    return _map_rows(
+        _fan_out(t(spark, sf_dir, "documents").select("doc_id", "text")), run,
+        "doc_id long, n_tokens bigint, id_sum bigint")
 
 
 def _bpe_oracle_sql(sf_dir: str) -> str:
@@ -4298,36 +4193,20 @@ def _repetition_frame(d):
     values (bigram identity via word tuples == concat on the split
     character, which words cannot contain; rep_bp floor division
     unchanged)."""
-    import pandas as pd
+    from collections import Counter
 
-    def rep(batches):
-        from collections import Counter
+    def rep(did, text):
+        w = text.split(" ")
+        if len(w) < 2:
+            return
+        nb = len(w) - 1
+        top = max(Counter(zip(w, w[1:])).values())
+        yield did, len(w), len(set(w)), nb, top, top * 10000 // nb
 
-        for pdf in batches:
-            ids, nw, nd, nb, tb = [], [], [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                w = text.split(" ")
-                if len(w) < 2:
-                    continue
-                c = Counter(zip(w, w[1:]))
-                ids.append(did)
-                nw.append(len(w))
-                nd.append(len(set(w)))
-                nb.append(len(w) - 1)
-                tb.append(max(c.values()))
-            yield pd.DataFrame({
-                "doc_id": pd.array(ids, dtype="int64"),
-                "n_words": pd.array(nw, dtype="int32"),
-                "n_distinct_words": pd.array(nd, dtype="int32"),
-                "n_bigrams": pd.array(nb, dtype="int64"),
-                "top_bigram_n": pd.array(tb, dtype="int64"),
-                "rep_bp": pd.array([t * 10000 // b
-                                    for t, b in zip(tb, nb)], dtype="int64"),
-            })
-
-    return d.select("doc_id", "text").mapInPandas(
-        rep, "doc_id long, n_words int, n_distinct_words int, "
-             "n_bigrams long, top_bigram_n long, rep_bp long")
+    return _map_rows(
+        d.select("doc_id", "text"), rep,
+        "doc_id long, n_words int, n_distinct_words int, n_bigrams long, "
+        "top_bigram_n long, rep_bp long")
 
 
 SQL_TEXT_REPETITION = """
@@ -4547,22 +4426,13 @@ def q_mm_binary_meta(spark, sf_dir):
     (byte length, 4-byte magic hex, deterministic sample count) — the same
     shape an image/audio decode UDF takes; the decode itself is stubbed in
     htmpark.multimodal."""
-    import pandas as pd
+    def meta(did, p):
+        yield did, len(p), bytes(p[:4]).hex().upper(), len(p) // 100
 
-    d = _fan_out(t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")))
-
-    def meta(batches):
-        for pdf in batches:
-            pays = pdf["payload"]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_bytes": [len(p) for p in pays],
-                "magic_hex": [bytes(p[:4]).hex().upper() for p in pays],
-                "n_samples": [len(p) // 100 for p in pays],
-            })
-
-    return d.mapInPandas(meta, "doc_id long, n_bytes int, magic_hex string, n_samples int")
+    return _map_rows(
+        _fan_out(t(spark, sf_dir, "documents").select(
+            "doc_id", F.encode("text", "UTF-8").alias("payload"))), meta,
+        "doc_id long, n_bytes int, magic_hex string, n_samples int")
 
 
 SQL_MM_BINARY_META = """
@@ -4582,30 +4452,18 @@ def q_mm_frame_sample(spark, sf_dir):
     frame fingerprint.  The row-expanding shape (doc -> k frames) is the
     same plumbing a real frame decoder feeds; the decode itself stays the
     documented stub."""
-    import pandas as pd
+    from .multimodal import frame_sample_indices
 
-    d = _fan_out(t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")))
+    def run(did, p):
+        p = bytes(p)
+        for fi in frame_sample_indices(len(p) // 100, 4):
+            off = fi * 100
+            yield did, fi, off, p[off:off + 2].hex().upper()
 
-    def run(batches):
-        from .multimodal import frame_sample_indices
-
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "frame_off": [],
-                   "frame_hex": []}
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(p)
-                n_frames = len(p) // 100
-                for fi in frame_sample_indices(n_frames, 4):
-                    off = fi * 100
-                    out["doc_id"].append(did)
-                    out["frame_idx"].append(fi)
-                    out["frame_off"].append(off)
-                    out["frame_hex"].append(p[off:off + 2].hex().upper())
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(
-        run, "doc_id long, frame_idx int, frame_off int, frame_hex string")
+    return _map_rows(
+        _fan_out(t(spark, sf_dir, "documents").select(
+            "doc_id", F.encode("text", "UTF-8").alias("payload"))), run,
+        "doc_id long, frame_idx int, frame_off int, frame_hex string")
 
 
 SQL_MM_FRAME_SAMPLE = """
@@ -4682,46 +4540,23 @@ def q_mm_decode(spark, sf_dir):
     of a real 100 TB media-decode pass (decode cost dominates; no
     shuffle, no driver involvement); swap _mm_synth_payload for a real
     payload column and nothing else changes."""
-    import pandas as pd
+    from .multimodal import decode_audio, decode_image, sniff_mime
 
-    d = _fan_out(t(spark, sf_dir, "documents").select("doc_id"))
+    def run(did):
+        p = _mm_synth_payload(did)
+        if did % 2 == 0:
+            m = decode_image(p)
+            yield (did, "ico" if did % 4 == 2 else "bmp", sniff_mime(p),
+                   m["height"], m["width"], None, None, m["pix_checksum"])
+        else:
+            m = decode_audio(p)
+            yield (did, "wav", sniff_mime(p), None, None, m["n_samples"],
+                   m["sample_rate"], m["sample_checksum"])
 
-    def run(batches):
-        from .multimodal import decode_audio, decode_image, sniff_mime
-
-        for pdf in batches:
-            out = {"doc_id": [], "kind": [], "mime": [], "height": [],
-                   "width": [], "n_samples": [], "sample_rate": [],
-                   "checksum": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                p = _mm_synth_payload(did)
-                out["doc_id"].append(did)
-                out["mime"].append(sniff_mime(p))
-                if did % 2 == 0:
-                    m = decode_image(p)
-                    out["kind"].append("ico" if did % 4 == 2 else "bmp")
-                    out["height"].append(m["height"])
-                    out["width"].append(m["width"])
-                    out["n_samples"].append(None)
-                    out["sample_rate"].append(None)
-                    out["checksum"].append(m["pix_checksum"])
-                else:
-                    m = decode_audio(p)
-                    out["kind"].append("wav")
-                    out["height"].append(None)
-                    out["width"].append(None)
-                    out["n_samples"].append(m["n_samples"])
-                    out["sample_rate"].append(m["sample_rate"])
-                    out["checksum"].append(m["sample_checksum"])
-            for c in ("height", "width", "n_samples", "sample_rate",
-                      "checksum"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(
-        run, "doc_id long, kind string, mime string, height int, "
-             "width int, n_samples int, sample_rate int, checksum int")
+    return _map_rows(
+        _fan_out(t(spark, sf_dir, "documents").select("doc_id")), run,
+        "doc_id long, kind string, mime string, height int, width int, "
+        "n_samples int, sample_rate int, checksum int")
 
 
 SQL_MM_DECODE = """
@@ -4785,70 +4620,41 @@ def q_dedup_winnowing(spark, sf_dir, k: int = _WIN_K, w: int = _WIN_W,
     idiom shared with minhash — engine-exact, no float anywhere; the
     per-doc aggregate (count / bit_xor / min over int64) is exact
     integer arithmetic in either engine."""
-    import pandas as pd
+    import hashlib
 
-    d = (t(spark, sf_dir, "documents")
-         .select("doc_id", "text")
-         .where(F.size(F.split("text", " ")) >= k + w - 1))
-    par = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < par:
-        d = d.repartition(par)
+    import numpy as np
 
-    def winnow(batches):
-        import hashlib
+    d = _fan_out(t(spark, sf_dir, "documents")
+                 .select("doc_id", "text")
+                 .where(F.size(F.split("text", " ")) >= k + w - 1))
 
-        import numpy as np
-
-        for pdf in batches:
-            rows_d, rows_g, rows_f, rows_x, rows_m = [], [], [], [], []
-            fp_d, fp_g, fp_w = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = text.split(" ")
-                n_grams = len(toks) - (k - 1)
-                if n_grams < w:  # matches size >= k + w - 1
-                    continue
-                hs = np.fromiter(
-                    (int(hashlib.md5(
-                        " ".join(toks[i:i + k]).encode("utf-8")
-                     ).hexdigest()[:15], 16) for i in range(n_grams)),
-                    dtype=np.int64, count=n_grams)
-                wm = np.lib.stride_tricks.sliding_window_view(
-                    hs, w).min(axis=1)
-                sel = np.unique(wm)  # per-doc distinct selected hashes
-                if fingerprint_rows:
-                    fp_d.extend([did] * len(sel))
-                    fp_g.extend([n_grams] * len(sel))
-                    fp_w.extend(sel.tolist())
-                else:
-                    x = 0
-                    for v in sel.tolist():
-                        x ^= v
-                    rows_d.append(did)
-                    rows_g.append(n_grams)
-                    rows_f.append(len(sel))
-                    rows_x.append(x)
-                    rows_m.append(int(sel[0]))
-            if fingerprint_rows:
-                yield pd.DataFrame({
-                    "doc_id": pd.array(fp_d, dtype="int64"),
-                    "n_grams": pd.array(fp_g, dtype="int64"),
-                    "wmin": pd.array(fp_w, dtype="int64")})
-            else:
-                yield pd.DataFrame({
-                    "doc_id": pd.array(rows_d, dtype="int64"),
-                    "n_grams": pd.array(rows_g, dtype="int64"),
-                    "n_fp": pd.array(rows_f, dtype="int64"),
-                    "fp_xor": pd.array(rows_x, dtype="int64"),
-                    "fp_min": pd.array(rows_m, dtype="int64")})
+    def winnow(did, text):
+        toks = text.split(" ")
+        n_grams = len(toks) - (k - 1)
+        if n_grams < w:  # matches size >= k + w - 1
+            return
+        hs = np.fromiter(
+            (int(hashlib.md5(" ".join(toks[i:i + k]).encode("utf-8")
+                             ).hexdigest()[:15], 16) for i in range(n_grams)),
+            dtype=np.int64, count=n_grams)
+        sel = np.unique(  # per-doc distinct selected hashes
+            np.lib.stride_tricks.sliding_window_view(hs, w).min(axis=1)
+        ).tolist()
+        if fingerprint_rows:
+            for v in sel:
+                yield did, n_grams, v
+            return
+        x = 0
+        for v in sel:
+            x ^= v
+        yield did, n_grams, len(sel), x, sel[0]
 
     if fingerprint_rows:
         # the pairing consumer's surface: one row per selected hash —
         # join docs on wmin to find winnowing-overlap candidates
-        return d.mapInPandas(
-            winnow, "doc_id long, n_grams long, wmin long")
-    return d.mapInPandas(
-        winnow, "doc_id long, n_grams long, n_fp long, fp_xor long, "
-                "fp_min long")
+        return _map_rows(d, winnow, "doc_id long, n_grams long, wmin long")
+    return _map_rows(d, winnow, "doc_id long, n_grams long, n_fp long, "
+                                "fp_xor long, fp_min long")
 
 
 SQL_DEDUP_WINNOWING = f"""
@@ -5297,13 +5103,9 @@ def q_html_main_content(spark, sf_dir):
     row-local select; salt_buckets=0 because the synthetic input is
     host-interleaved by construction (the auto-salting decision for real
     crawls lives in extract_pages)."""
-    from .corpus import synthesize_pages
     from .job import extract_pages
 
-    n_docs = _table_num_rows(sf_dir, "documents")
-    if n_docs is None:
-        n_docs = t(spark, sf_dir, "documents").count()
-    pages = synthesize_pages(spark, _corpus_n_pages(n_docs))
+    pages = _corpus_pages(spark, sf_dir)
     out = extract_pages(pages, salt_buckets=0)
     return out.select("url", "main_text",
                       F.length("main_text").alias("main_chars"),
@@ -5422,13 +5224,9 @@ def _resolved_outlinks(spark, sf_dir):
     remove_dot_segments (§5.2.4, _RDS_EXPR) with any ?query/#fragment
     suffix held out of the fold, and the ``path`` column is that
     cleaned path for every href form."""
-    from .corpus import synthesize_pages
     from .job import extract_pages
 
-    n_docs = _table_num_rows(sf_dir, "documents")
-    if n_docs is None:
-        n_docs = t(spark, sf_dir, "documents").count()
-    pages = synthesize_pages(spark, _corpus_n_pages(n_docs))
+    pages = _corpus_pages(spark, sf_dir)
     # '&' in an attribute value must be authored as '&amp;' (a bare
     # '&' starts a character reference and trips the reference's
     # stale-temp-buffer quirk Q5); the parsed href round-trips to the
@@ -5777,35 +5575,18 @@ def _robots_rules_df_modes(spark, n_keys: int, modes: tuple = (0, 1)):
     second join.  The dim is at most len(modes) x rules per host
     (still a few rows per host); group selection and regex translation
     still run once per (host, mode), never per url."""
-    import pandas as pd
+    from .robots import parse_robots, pattern_regex
 
-    hosts = _robots_hosts_df(spark, n_keys, "host_num")
+    def parse(h, txt):
+        for strict in modes:
+            for rule_type, pattern in parse_robots(
+                    txt, exact_tokens=bool(strict)):
+                if pattern:  # empty Disallow: = allow-all no-op
+                    yield (h, rule_type, pattern_regex(pattern),
+                           len(pattern), strict)
 
-    def parse(batches):
-        from .robots import parse_robots, pattern_regex
-
-        for pdf in batches:
-            hn, typ, rx, pl, st = [], [], [], [], []
-            for h, txt in zip(pdf["host_num"], pdf["robots_txt"]):
-                for strict in modes:
-                    for rule_type, pattern in parse_robots(
-                            txt, exact_tokens=bool(strict)):
-                        if pattern:  # empty Disallow: = allow-all no-op
-                            hn.append(h)
-                            typ.append(rule_type)
-                            rx.append(pattern_regex(pattern))
-                            pl.append(len(pattern))
-                            st.append(strict)
-            yield pd.DataFrame({
-                "host_num": pd.Series(hn, dtype="int32"),
-                "rule_type": pd.Series(typ, dtype="object"),
-                "rx": pd.Series(rx, dtype="object"),
-                "plen": pd.Series(pl, dtype="int32"),
-                "strict": pd.Series(st, dtype="int32"),
-            })
-
-    return hosts.mapInPandas(
-        parse,
+    return _map_rows(
+        _robots_hosts_df(spark, n_keys, "host_num"), parse,
         "host_num int, rule_type string, rx string, plen int, strict int")
 
 
@@ -6150,33 +5931,16 @@ def _sitemap_loc_df(spark, n_keys: int):
     logic runs once per HOST/sitemap, never per url.  Columns:
     host_num, loc, in_scope (0 = dropped by the location rule — the
     declared-spam counter the coverage rollup surfaces)."""
-    import pandas as pd
+    from .robots import sitemaps
+    from .sitemap import loc_in_scope, sitemap_locs
 
-    hosts = _robots_hosts_df(spark, n_keys, "host_num")
+    def gen(h, txt):
+        for su in dict.fromkeys(sitemaps(txt)):  # consumer dedups by URL
+            for loc in sitemap_locs(_synth_sitemap_xml(su)):
+                yield h, loc, int(loc_in_scope(loc, su))
 
-    def gen(batches):
-        from .robots import sitemaps
-        from .sitemap import loc_in_scope, sitemap_locs
-
-        for pdf in batches:
-            hn, lo, sc = [], [], []
-            for h, txt in zip(pdf["host_num"], pdf["robots_txt"]):
-                seen = set()
-                for su in sitemaps(txt):
-                    if su in seen:  # consumer dedups by fetch URL
-                        continue
-                    seen.add(su)
-                    for loc in sitemap_locs(_synth_sitemap_xml(su)):
-                        hn.append(h)
-                        lo.append(loc)
-                        sc.append(int(loc_in_scope(loc, su)))
-            yield pd.DataFrame({
-                "host_num": pd.Series(hn, dtype="int32"),
-                "loc": pd.Series(lo, dtype="object"),
-                "in_scope": pd.Series(sc, dtype="int32"),
-            })
-
-    return hosts.mapInPandas(gen, "host_num int, loc string, in_scope int")
+    return _map_rows(_robots_hosts_df(spark, n_keys, "host_num"), gen,
+                     "host_num int, loc string, in_scope int")
 
 
 def q_web_sitemap_coverage(spark, sf_dir):
@@ -6320,23 +6084,13 @@ def _robots_delay_df(spark, n_keys: int):
     fractional declared delays round up via _delay_whole_seconds (int()
     truncation would turn 'Crawl-delay: 0.5' into a zero-divisor in
     the budget's integer token bucket)."""
-    import pandas as pd
+    from .robots import crawl_delay
 
-    hosts = _robots_hosts_df(spark, n_keys, "hmod")
+    def parse(hmod, txt):
+        yield hmod, _delay_whole_seconds(crawl_delay(txt))
 
-    def parse(batches):
-        from .robots import crawl_delay
-
-        for pdf in batches:
-            delays = [crawl_delay(txt) for txt in pdf["robots_txt"]]
-            yield pd.DataFrame({
-                "hmod": pdf["hmod"].astype("int32"),
-                "delay_s": pd.array(
-                    [_delay_whole_seconds(d) for d in delays],
-                    dtype="Int32"),
-            })
-
-    return hosts.mapInPandas(parse, "hmod int, delay_s int")
+    return _map_rows(_robots_hosts_df(spark, n_keys, "hmod"), parse,
+                     "hmod int, delay_s int")
 
 
 def q_web_politeness_budget(spark, sf_dir, window_s: int = 3600):
@@ -7018,9 +6772,9 @@ def q_warc_wet_export(spark, sf_dir):
 
     from .warc import read_wet, write_wet_shards
 
-    pre, post = _WRAP_PLAIN
     url, ts = _warc_gate_url_ts()
-    txt = _parse_docs(spark, sf_dir, pre, post).select(url, ts, "text")
+    txt = _parse_docs(spark, sf_dir, _WRAP_PLAIN,
+                      "doc_id long, text string").select(url, ts, "text")
     out = tempfile.mkdtemp(prefix="htmpark_wet_gate_")
     _STREAM_SINK_DIRS.append(out)
     write_wet_shards(txt.repartition(8, "url"), out)
@@ -7151,24 +6905,14 @@ def _lm_frames_over(d):
     one mapInPandas stage emitting the already-aggregated tf rows; cf
     stays the distributed corpus aggregate over them (exact integer
     sums, unchanged)."""
-    import pandas as pd
+    from collections import Counter
 
-    def tfmap(batches):
-        from collections import Counter
+    def tfmap(did, text):
+        for term, n in Counter(text.split(" ")).items():
+            yield did, term, n
 
-        for pdf in batches:
-            ids, terms, tfs = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                for term, n in Counter(text.split(" ")).items():
-                    ids.append(did)
-                    terms.append(term)
-                    tfs.append(n)
-            yield pd.DataFrame({"doc_id": pd.array(ids, dtype="int64"),
-                                "term": terms,
-                                "tf": pd.array(tfs, dtype="int64")})
-
-    tf = d.select("doc_id", "text").mapInPandas(
-        tfmap, "doc_id long, term string, tf long")
+    tf = _map_rows(d.select("doc_id", "text"), tfmap,
+                   "doc_id long, term string, tf long")
     cf = tf.groupBy("term").agg(F.sum("tf").alias("cf"))
     return tf, cf
 

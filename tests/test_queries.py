@@ -2058,19 +2058,83 @@ def test_probe_rows_upper_bound_is_sound_property(tmp_path):
     @given(st.sets(st.integers(min_value=0, max_value=10_000),
                    min_size=1, max_size=300),
            st.integers(min_value=1, max_value=120),
-           st.integers(min_value=50, max_value=200))
-    def check(ids, k, rg_size):
-        d = tmp_path / f"p{abs(hash((tuple(sorted(ids))[:5], k, rg_size)))}"
+           st.integers(min_value=50, max_value=200),
+           st.integers(min_value=0, max_value=119))
+    def check(ids, k, rg_size, r):
+        r %= k
+        d = tmp_path / f"p{abs(hash((tuple(sorted(ids))[:5], k, rg_size, r)))}"
         d.mkdir(exist_ok=True)
         f = d / "tbl.parquet"
         pq.write_table(pa.table({"doc_id": sorted(ids)}), str(f),
                        row_group_size=rg_size)
-        b = _probe_rows_upper_bound(str(d), "tbl", "doc_id", k)
-        true = sum(1 for i in ids if i % k == 0)
+        b = _probe_rows_upper_bound(str(d), "tbl", "doc_id", k, r)
+        true = sum(1 for i in ids if i % k == r)
         assert b is not None and b >= true
         assert b <= len(ids)
 
     check()
+
+
+def test_centroid_gate_counts_clustered_ids(spark, monkeypatch, tmp_path):
+    """IVF / k-means take the broadcast scorers only under a SOUND bound
+    on the centroid set (vec_id % 50 == 7).  Here every id is ≡ 7 (mod
+    50), so all rows are centroids and there are more of them than
+    _MAX_BROADCAST_PROBES: both queries must keep the max_by plan.  A
+    dense-id guess (n // 50 + 1) would broadcast all of them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from htmpark import queries as qm
+
+    n = qm._MAX_BROADCAST_PROBES + 1
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(7, 7 + 50 * n, 50), type=pa.int64()),
+        "embedding": pa.array([[1.0, 0.5]] * n, type=pa.list_(pa.float32())),
+    }), str(tmp_path / "embeddings.parquet"))
+    assert qm._probe_rows_upper_bound(str(tmp_path), "embeddings",
+                                      "vec_id", 50, 7) == n
+    assert qm._centroids_fit_broadcast(SF)  # dense ids: broadcast regime
+
+    def no_broadcast(*a, **k):
+        raise AssertionError("centroid set broadcast beyond the bound")
+
+    monkeypatch.setattr(qm, "_np_probe_broadcast", no_broadcast)
+    assert qm.q_sim_ivf_topk(spark, str(tmp_path)).columns == [
+        "probe_id", "rank", "vec_id", "cos_e4"]
+    assert qm.q_sim_kmeans_update(spark, str(tmp_path)).columns == [
+        "cent_id", "dim", "n_members", "sum_e4"]
+
+
+def test_map_rows_types_and_shapes(spark):
+    """_map_rows: a row may expand into several rows or yield nothing,
+    None lands in a nullable int column, binary values arrive as bytes
+    and lists leave as array<string>; a batch whose every row yields
+    nothing still comes out with the declared types."""
+    from htmpark.queries import _map_rows
+
+    df = spark.createDataFrame([(1, b"ab"), (2, b""), (3, b"xyz")],
+                               "k long, p binary").coalesce(1)
+
+    def fn(k, p):
+        assert type(p) is bytes
+        for i in range(len(p)):  # the empty payload yields no row
+            yield (k, i, None if i == 1 else len(p),
+                   [chr(c) for c in p[:i + 1]], i == 0)
+
+    out = _map_rows(df, fn, "k long, i int, n int, pre array<string>, "
+                            "first boolean")
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("k", "bigint"), ("i", "int"), ("n", "int"),
+        ("pre", "array<string>"), ("first", "boolean")]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 0, 2, ["a"], True), (1, 1, None, ["a", "b"], False),
+        (3, 0, 3, ["x"], True), (3, 1, None, ["x", "y"], False),
+        (3, 2, 3, ["x", "y", "z"], False)]
+
+    none = _map_rows(df, lambda k, p: iter(()),
+                     "k long, i int, s string, ok boolean")
+    assert none.collect() == []
+    assert none.toPandas().shape == (0, 4)
 
 
 def test_idn_spellings_alias_one_surt_key(spark):
