@@ -177,6 +177,49 @@ def _parse_batches(batches, preserve_ws: bool = False):
         })
 
 
+def _drop_zip_finders() -> None:
+    """Forget the zip-archive path finders this Python worker holds.
+
+    pyspark's worker starts every task with ``importlib.invalidate_caches()``
+    (``worker_util.setup_spark_files``), and on CPython 3.11 each
+    ``zipimport.zipimporter`` answers that by re-reading its whole archive
+    directory.  A reused worker holds one such finder per pyspark
+    subpackage it imported out of ``pyspark.zip`` (16 on a warm worker,
+    1,328 archive entries each), so every task re-read that directory 16
+    times: ~0.2 s of CPU per task whatever the task carried
+    (BENCH/BASELINE.md "Per-task cost").
+
+    Only zip finders go; FileFinders and every loaded module (which keeps
+    its own loader) stay.  A dropped path entry gets a fresh finder the
+    next time an import searches it, so the archive is read once then,
+    and an archive added later (``addPyFile``) is a new ``sys.path`` entry
+    with its own finder."""
+    import sys
+    import zipimport
+
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items()
+                 if isinstance(f, zipimport.zipimporter)]:
+        cache.pop(path, None)
+
+
+def python_stage(fn):
+    """``fn``, an Iterator[pd.DataFrame] -> Iterator[pd.DataFrame] map
+    function, as the one entry every htmpark Python map stage goes
+    through: the task drops the worker's zip finders
+    (``_drop_zip_finders``) before ``fn`` runs, so the next task on this
+    worker does not re-read pyspark.zip.  Grouped UDFs
+    (``applyInPandas``, ``applyInPandasWithState``) cannot be wrapped —
+    pyspark reads their arity — and call the helper on their first line
+    instead."""
+
+    def run(batches):
+        _drop_zip_finders()
+        return fn(batches)
+
+    return run
+
+
 def _stat_host(v) -> tuple[str, bool]:
     """(host, host_is_complete) for a url min/max statistic (str or
     bytes).  Parquet writers truncate long string stats (and increment
@@ -276,9 +319,10 @@ def _parse_width(df: DataFrame) -> int:
     """Task count of the salted exchange: the input scan's own split count
     (Spark's byte-based file sizing), floored at defaultParallelism — the
     getNumPartitions-vs-parallelism rule of doc_signals / _fan_out.  Each
-    Python parse task carries a fixed cost (BENCH/BASELINE.md "Per-task
-    cost"), so a fixed multiple of the slots makes small inputs pay for
-    tasks that carry almost nothing.  On a scan input (parquet, WARC
+    Python parse task carries a fixed cost (~0.07 s of slot time since
+    python_stage, ~0.28 s before; BENCH/BASELINE.md "Per-task cost"), so
+    a fixed multiple of the slots makes small inputs pay for tasks that
+    carry almost nothing.  On a scan input (parquet, WARC
     shards) this is driver-side planning only, never a Spark job; an input
     whose plan already holds a shuffle would run it here under AQE, so
     such callers pass ``num_partitions``."""
@@ -359,7 +403,7 @@ def extract_pages(df: DataFrame, salt_buckets: int | str = 8,
         df = salted_repartition(df, salt_buckets,
                                 num_partitions or _parse_width(df))
     fn = (lambda it: _parse_batches(it, True)) if preserve_ws else _parse_batches
-    return df.mapInPandas(fn, OUTPUT_SCHEMA)
+    return df.mapInPandas(python_stage(fn), OUTPUT_SCHEMA)
 
 
 def drop_noindex(df: DataFrame) -> DataFrame:

@@ -26,6 +26,8 @@ import wave
 
 from pyspark.sql import DataFrame, functions as F
 
+from .job import python_stage
+
 IMAGE_MAGIC = {
     b"\x89PNG": "image/png",
     b"\xff\xd8\xff": "image/jpeg",
@@ -280,7 +282,7 @@ def image_meta_stage(df: DataFrame, payload_col: str = "payload",
         [f"{c} {dict(df.dtypes)[c]}" for c in other]
         + ["mime string", "height int", "width int", "pix_checksum int"]
     )
-    return df.mapInPandas(run, schema)
+    return df.mapInPandas(python_stage(run), schema)
 
 
 def resize_nn(pixels: bytes, h: int, w: int,
@@ -342,7 +344,7 @@ def resize_stage(df: DataFrame, target_h: int = 224, target_w: int = 224,
         [f"{c} {dict(df.dtypes)[c]}" for c in other]
         + ["rh int", "rw int", "scale_num int", "scale_den int",
            "resized_checksum int"])
-    return df.mapInPandas(run, schema)
+    return df.mapInPandas(python_stage(run), schema)
 
 
 def content_bytes(payload: bytes) -> bytes:
@@ -394,4 +396,4 @@ def feature_stage(df: DataFrame, n_buckets: int = 8,
 
     schema = ", ".join([f"{c} {dict(df.dtypes)[c]}" for c in other]
                        + ["features array<int>"])
-    return df.mapInPandas(run, schema)
+    return df.mapInPandas(python_stage(run), schema)

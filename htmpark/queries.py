@@ -14,7 +14,7 @@ runs on the same parquet tables (CORRECTNESS_r{N}.json gate).  Design rules:
   hashing and tokenizing, robots/sitemap parsing, media decode) runs in
   ONE map stage, _map_rows; only the whole-batch numpy scorers
   (_np_map) and idn_ascii_urls' batch pass-through call mapInPandas
-  themselves.
+  themselves.  Each of the three enters through job.python_stage.
 
 Scale notes per query are inline: what shuffles, what broadcasts, what the
 plan looks like at 10^12 rows.
@@ -28,12 +28,59 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
+from .job import _drop_zip_finders, python_stage
+
 # ---------------------------------------------------------------------------
 # helpers
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Table ``name`` of ``sf_dir``.  The reader gets the schema its
+    footers already state (_footer_schema), so building a plan runs no
+    Spark job; without one, Spark infers the schema in a one-task job
+    per read, even for a single file."""
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark would infer for the parquet table at ``path``,
+    read from its footers on the driver: the Spark schema a Spark writer
+    stored there, else the Arrow schema converted the way Spark converts
+    it (a tz-naive timestamp is TIMESTAMP_NTZ when
+    ``spark.sql.parquet.inferTimestampNTZ.enabled``).  None — infer as
+    before — when the footers cannot settle it: no files (a missing path
+    still raises in the reader), partition subdirectories, files whose
+    schemas differ, or INT96 timestamps without a stored Spark schema."""
+    import json
+    import os
+
+    import pyarrow.parquet as _pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    files = _parquet_files(path)
+    if not files or any(os.path.dirname(f) != path
+                        for f in files if f != path):
+        return None
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled",
+                         "true") == "true"
+    schemas = []
+    for f in files:
+        pf = _pq.ParquetFile(f)
+        stored = (pf.schema_arrow.metadata or {}).get(
+            b"org.apache.spark.sql.parquet.row.metadata")
+        if stored:
+            schemas.append(StructType.fromJson(json.loads(stored)))
+        elif any(c.physical_type == "INT96" for c in pf.schema):
+            return None
+        else:
+            schemas.append(from_arrow_schema(pf.schema_arrow,
+                                             prefer_timestamp_ntz=ntz))
+    if any(s != schemas[0] for s in schemas[1:]):
+        return None
+    return schemas[0]
 
 
 def _table_num_rows(sf_dir: str, name: str) -> int | None:
@@ -1520,6 +1567,7 @@ def q_rel_user_gap_stats(spark, sf_dir):
          .select("user_id", "ts", "event_id"))
 
     def stats(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        _drop_zip_finders()
         pdf = pdf.sort_values(["ts", "event_id"])
         us = pdf["ts"].values.astype("datetime64[us]").astype("int64")
         uid = int(pdf["user_id"].iat[0])
@@ -2780,7 +2828,7 @@ def _map_rows(df: DataFrame, fn, schema: str) -> DataFrame:
                              else pd.array(v, dtype=dt))
             yield pd.DataFrame(out)
 
-    return df.mapInPandas(run, schema)
+    return df.mapInPandas(python_stage(run), schema)
 
 
 def _lsh_bucket_expr(col, n_bits: int = _LSH_BITS):
@@ -2951,12 +2999,12 @@ def _np_probe_broadcast(probes, id_col: str, vec_col: str):
 
 
 def _np_map(df, bc, fn, schema: str) -> DataFrame:
-    """``df.mapInPandas(fn, schema)`` for a scorer over broadcast ``bc``;
+    """``df.mapInPandas(python_stage(fn), schema)`` for a scorer over broadcast ``bc``;
     an empty probe/centroid side (``bc`` None) has nothing to score and
     short-circuits to an empty frame, as the pre-r12 join plan did."""
     if bc is None:
         return df.sparkSession.createDataFrame([], schema)
-    return df.mapInPandas(fn, schema)
+    return df.mapInPandas(python_stage(fn), schema)
 
 
 def _np_cosine_candidates(e, bc, *, top_n: int | None = None,
@@ -4837,7 +4885,7 @@ def idn_ascii_urls(df):
                 pdf.loc[sel, "url"] = [_idn_to_ascii(x) for x in u[sel]]
             yield pdf
 
-    return df.mapInPandas(enc, df.schema)
+    return df.mapInPandas(python_stage(enc), df.schema)
 
 
 def _with_canon_url(df):

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .job import OUTPUT_SCHEMA, _parse_batches
+from .job import OUTPUT_SCHEMA, _drop_zip_finders, _parse_batches, python_stage
 
 CORPUS_DDL = ("url string, warc_ts timestamp, html binary, text string, "
               "lang string")
@@ -33,7 +33,7 @@ def extract_pages_stream(spark: SparkSession, input_path: str,
            .option("maxFilesPerTrigger", "64")
            .parquet(input_path)
            .select("url", "warc_ts", "html", "lang"))
-    out = sdf.mapInPandas(_parse_batches, OUTPUT_SCHEMA)
+    out = sdf.mapInPandas(python_stage(_parse_batches), OUTPUT_SCHEMA)
     writer = (out.writeStream.format("parquet")
               .option("path", output_path)
               .option("checkpointLocation", checkpoint_path)
@@ -138,6 +138,7 @@ def sessionize_stream(events: DataFrame, gap_s: int = 300,
     gap_us = gap_s * 1_000_000
 
     def fn(key, pdf_iter, state: GroupState):
+        _drop_zip_finders()
         (user_id,) = key
         if state.hasTimedOut:
             start_us, last_us, n, cents = state.get

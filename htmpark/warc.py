@@ -39,6 +39,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .job import python_stage
+
 _CRLF2 = b"\r\n\r\n"
 # feed zlib bounded input slices; a WARC header block larger than this is
 # malformed (real headers are a few hundred bytes)
@@ -272,7 +274,7 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
              .option("pathGlobFilter", "*.warc*")
              .load(path)
              .select("path", "content"))
-    return files.mapInPandas(_split_shard_batches, READ_WARC_SCHEMA)
+    return files.mapInPandas(python_stage(_split_shard_batches), READ_WARC_SCHEMA)
 
 
 def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -288,7 +290,7 @@ def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
              .option("pathGlobFilter", "*.warc*")
              .load(path)
              .select("path", "content"))
-    return files.mapInPandas(_split_shard_batches, READ_WARC_SCHEMA)
+    return files.mapInPandas(python_stage(_split_shard_batches), READ_WARC_SCHEMA)
 
 
 def _split_shard_batches(batches):
@@ -353,7 +355,7 @@ def read_wet(spark: SparkSession, path: str) -> DataFrame:
              .option("pathGlobFilter", "*.wet*")
              .load(path)
              .select("path", "content"))
-    return files.mapInPandas(_split_wet_batches, READ_WET_SCHEMA)
+    return files.mapInPandas(python_stage(_split_wet_batches), READ_WET_SCHEMA)
 
 
 def _split_wet_batches(batches):
@@ -497,7 +499,7 @@ def _write_shards(df: DataFrame, out_dir: str, payload_col: str,
                             "n_bytes": pd.Series([size], dtype="int64")})
 
     manifest = (df.select("url", "warc_ts", payload_col)
-                .mapInPandas(dump, "shard string, n_records long, "
+                .mapInPandas(python_stage(dump), "shard string, n_records long, "
                                    "n_bytes long")
                 .collect())
     return [(r.shard, r.n_records, r.n_bytes) for r in manifest

@@ -739,6 +739,17 @@ def test_package_runs_from_pyfiles_zip(tmp_out):
         "t, m = htmpark.extract_text(b'<p>a &amp; b &notin; c</p>')\n"
         "assert t == 'a & b \\u00acin; c', repr(t)\n"
         "assert m['finished'] and m['tok_errors'] == 0\n"
+        # a Python stage drops the zip finders; a submodule not yet
+        # imported must still load from the zip afterwards
+        "import zipimport\n"
+        "from htmpark.job import _drop_zip_finders\n"
+        "_drop_zip_finders()\n"
+        "assert not any(isinstance(f, zipimport.zipimporter)\n"
+        "               for f in sys.path_importer_cache.values())\n"
+        "assert 'htmpark.robots' not in sys.modules\n"
+        "import htmpark.robots\n"
+        "assert htmpark.robots.__file__.startswith(sys.argv[1])\n"
+        "assert htmpark.extract_text(b'<p>a &amp; b &notin; c</p>')[0] == t\n"
         "print('zip-ok')\n"
     )
     r = subprocess.run([sys.executable, "-c", code, zpath], cwd=tmp_out,
@@ -746,6 +757,122 @@ def test_package_runs_from_pyfiles_zip(tmp_out):
     assert r.returncode == 0, r.stderr
     assert "zip-ok" in r.stdout
 
+
+
+def test_drop_zip_finders_keeps_imports_working(tmp_out):
+    """_drop_zip_finders removes the zipimporter entries of
+    sys.path_importer_cache and nothing else; a module of the same
+    archive that was not yet imported still imports afterwards."""
+    import sys
+    import zipfile
+    import zipimport
+
+    from htmpark.job import _drop_zip_finders
+
+    zpath = os.path.join(tmp_out, "mods.zip")
+    with zipfile.ZipFile(zpath, "w") as z:
+        z.writestr("zdrop_a.py", "A = 1\n")
+        z.writestr("zdrop_b.py", "B = 2\n")
+    sys.path.insert(0, zpath)
+    try:
+        import zdrop_a
+        cache = sys.path_importer_cache
+        assert isinstance(cache[zpath], zipimport.zipimporter)
+        kept = {p: f for p, f in cache.items()
+                if not isinstance(f, zipimport.zipimporter)}
+        assert any(type(f).__name__ == "FileFinder" for f in kept.values())
+        _drop_zip_finders()
+        assert cache.keys() == kept.keys()
+        assert all(cache[p] is f for p, f in kept.items())
+        import zdrop_b
+        assert (zdrop_a.A, zdrop_b.B) == (1, 2)
+        assert zdrop_b.__file__.startswith(zpath)
+    finally:
+        sys.path.remove(zpath)
+        sys.path_importer_cache.pop(zpath, None)
+        sys.modules.pop("zdrop_a", None)
+        sys.modules.pop("zdrop_b", None)
+
+
+def test_python_stage_leaves_worker_without_zip_finders(tmp_out):
+    """On local[1] one reused Python worker runs every task, and pyspark
+    starts each task with importlib.invalidate_caches(), which makes
+    every zipimporter (one per pyspark subpackage imported out of
+    pyspark.zip) re-read its archive.  Inside a second _map_rows stage
+    the worker must hold no zipimporter."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from htmpark.job import build_session\n"
+        "from htmpark.queries import _map_rows\n"
+        "spark = build_session('local[1]', 1,\n"
+        "                      extra_conf={'spark.ui.enabled': 'false'})\n"
+        "def zips(_):\n"
+        "    import sys, zipimport\n"
+        "    yield (sum(isinstance(f, zipimport.zipimporter)\n"
+        "               for f in sys.path_importer_cache.values()),)\n"
+        "df = spark.range(1)\n"
+        "n = [_map_rows(df, zips, 'n int').collect()[0].n for _ in range(2)]\n"
+        "print('zip-finders', n[1])\n"
+        "spark.stop()\n"
+    )
+    env = dict(os.environ, HTMPARK_DRIVER_MEM="1g", PYTHONPATH=repo)
+    r = subprocess.run([sys.executable, "-c", code], cwd=repo, env=env,
+                       capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "zip-finders 0" in r.stdout, r.stdout
+
+
+def test_every_python_stage_goes_through_python_stage():
+    """Every mapInPandas in htmpark takes python_stage(fn), and every
+    grouped UDF body (applyInPandas, applyInPandasWithState) starts with
+    _drop_zip_finders(): a stage that skips both leaves its worker
+    re-reading pyspark.zip at every task start."""
+    import ast
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "htmpark")
+    maps = grouped = 0
+    for fn in sorted(os.listdir(pkg)):
+        if not fn.endswith(".py"):
+            continue
+        tree = ast.parse(open(os.path.join(pkg, fn)).read())
+        # the def a call's first argument names, in the enclosing function
+        named = {}
+        for outer in ast.walk(tree):
+            if isinstance(outer, ast.FunctionDef):
+                local = {d.name: d for d in outer.body
+                         if isinstance(d, ast.FunctionDef)}
+                for c in ast.walk(outer):
+                    if (isinstance(c, ast.Call) and c.args
+                            and getattr(c.args[0], "id", None) in local):
+                        named.setdefault(c, local[c.args[0].id])
+        for call in ast.walk(tree):
+            if not (isinstance(call, ast.Call)
+                    and isinstance(call.func, ast.Attribute)):
+                continue
+            where = f"{fn}:{call.lineno}"
+            if call.func.attr == "mapInPandas":
+                maps += 1
+                a = call.args[0]
+                assert (isinstance(a, ast.Call)
+                        and getattr(a.func, "id", None) == "python_stage"
+                        ), where
+            elif call.func.attr in ("applyInPandas",
+                                    "applyInPandasWithState"):
+                grouped += 1
+                body = named[call].body
+                first = body[0]
+                if (isinstance(first, ast.Expr)
+                        and isinstance(first.value, ast.Constant)):
+                    first = body[1]  # skip a docstring
+                assert (isinstance(first, ast.Expr)
+                        and isinstance(first.value, ast.Call)
+                        and getattr(first.value.func, "id", None)
+                        == "_drop_zip_finders"), where
+    assert maps >= 10 and grouped == 2
 
 def test_auto_salt_surt_sharded_hot_host(spark, tmp_out):
     """Hostile layout (r4 VERDICT fixture): a SURT-sorted corpus SHARDED

@@ -2137,6 +2137,31 @@ def test_map_rows_types_and_shapes(spark):
     assert none.toPandas().shape == (0, 4)
 
 
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_footer_schema_equals_inferred_schema(spark, sf):
+    """t() hands the reader the schema read from the table's footer, so
+    it must equal what Spark infers, table by table; and reading a table
+    then runs no Spark job (inference is a one-task job per read).  A
+    missing table still raises."""
+    from htmpark.queries import _footer_schema, t
+
+    sf_dir = f"/root/testdata/{sf}"
+    sc = spark.sparkContext
+    group = f"footer-schema-{sf}"
+    for name in TABLES:
+        path = f"{sf_dir}/{name}.parquet"
+        assert _footer_schema(spark, path) == spark.read.parquet(path).schema
+        sc.setJobGroup(group, group)
+        try:
+            df = t(spark, sf_dir, name)
+        finally:
+            sc._jsc.clearJobGroup()
+        assert df.schema == spark.read.parquet(path).schema, name
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        t(spark, sf_dir, "no_such_table")
+
 def test_idn_spellings_alias_one_surt_key(spark):
     """Unicode and punycode spellings of one host must canonicalize to
     the SAME canon_url/surt_key through idn_ascii_urls + the shared
