@@ -173,6 +173,17 @@ def _probe_rows_upper_bound(sf_dir: str, name: str, id_col: str,
         return None
 
 
+def _fits_broadcast(sf_dir: str, table: str, id_col: str, modulus: int,
+                    cap: int, remainder: int = 0) -> bool:
+    """THE probe-side regime rule: broadcast the rows with ``id_col %
+    modulus == remainder`` only when their sound footer bound
+    (_probe_rows_upper_bound) is known and at most ``cap``.  Unknown
+    scale (None) takes the shuffle / bucketed path.  Callers pass the cap
+    constant at call time, so patching it forces the large regime."""
+    b = _probe_rows_upper_bound(sf_dir, table, id_col, modulus, remainder)
+    return b is not None and b <= cap
+
+
 def _cents(col):
     """Exact integer cents from a 2dp-double column."""
     return F.round(col * 100).cast("bigint")
@@ -855,7 +866,7 @@ GROUP BY ROLLUP(o_year, o_orderpriority)
 """
 
 
-def q_rel_order_value_median(spark, sf_dir, bucket_width: int = 1 << 16):
+def q_rel_order_value_median(spark, sf_dir):
     """Exact per-group median via kth-element: engines disagree on
     percentile interpolation, so the median is DEFINED as the element at
     rank k = (n+1) div 2 under a total order (cents, orderkey) — exact and
@@ -883,8 +894,7 @@ def q_rel_order_value_median(spark, sf_dir, bucket_width: int = 1 << 16):
     v = o.select("o_orderpriority",
                  _cents(F.col("o_totalprice")).alias("cents"),
                  "o_orderkey")
-    med = two_phase_group_median(v, "o_orderpriority", "cents", "o_orderkey",
-                                 bucket_width)
+    med = two_phase_group_median(v, "o_orderpriority", "cents", "o_orderkey")
     return med.select("o_orderpriority",
                       F.col("median").alias("median_cents"),
                       F.col("n").alias("n_orders"))
@@ -1074,21 +1084,21 @@ def _kmv_hash():
                                1, 15), 16, 10).cast("bigint"))
 
 
-# sketch parameters shared by BOTH engines: the Spark builders default to
-# these and the DuckDB oracle SQL is generated from them (the _SUBSTR_W /
-# _SHINGLE_W pattern) — a non-default k/n_salts call can never silently
-# diverge from a stale hand-written oracle constant.
+# sketch parameters shared by BOTH engines: the Spark builders read these
+# and the DuckDB oracle SQL is generated from them (the _SUBSTR_W /
+# _SHINGLE_W pattern), so the two sides cannot drift.
 _KMV_K = 64
 _KMV_SALTS = 32
 _KMV_HSPACE = 1 << 60
 
 
-def q_sketch_distinct_kmv(spark, sf_dir, k: int = _KMV_K, n_salts: int = _KMV_SALTS):
+def q_sketch_distinct_kmv(spark, sf_dir):
     """Distributed cardinality sketch: KMV / bottom-k.  Distinct-user
     estimate per event type from the k-th smallest 60-bit hash of user_id —
     estimate = (2^60 div h_k) * (k-1), integer-divided FIRST so both
-    engines compute the identical value without int64 overflow.  Groups
-    with fewer than k distinct hashes fall back to the exact count.
+    engines compute the identical value without int64 overflow (k =
+    _KMV_K, n_salts = _KMV_SALTS below).  Groups with fewer than k
+    distinct hashes fall back to the exact count.
 
     TWO-PHASE exact selection (the mergeable-sketch shape): the group key
     has only 5 values, so a single row_number window partitioned by it
@@ -1107,20 +1117,20 @@ def q_sketch_distinct_kmv(spark, sf_dir, k: int = _KMV_K, n_salts: int = _KMV_SA
 
     e = t(spark, sf_dir, "events")
     d = e.select("event_type", _kmv_hash().alias("h")).distinct()
-    salted = d.withColumn("salt", F.pmod(F.col("h"), F.lit(n_salts)))
+    salted = d.withColumn("salt", F.pmod(F.col("h"), F.lit(_KMV_SALTS)))
     w1 = Window.partitionBy("event_type", "salt").orderBy("h")
     local = (salted.withColumn("rn", F.row_number().over(w1))
-                   .where(F.col("rn") <= k).drop("rn", "salt"))
+                   .where(F.col("rn") <= _KMV_K).drop("rn", "salt"))
     w2 = Window.partitionBy("event_type").orderBy("h")
     kth = (local.withColumn("rn", F.row_number().over(w2))
-            .where(F.col("rn") == k)
+            .where(F.col("rn") == _KMV_K)
             .select("event_type", F.col("h").alias("hk")))
     n = d.groupBy("event_type").agg(F.count("*").alias("n_exact"))
-    hspace = 1 << 60
     return (n.join(kth, "event_type", "left")
             .select("event_type", "n_exact",
-                    F.coalesce(F.expr(f"{hspace} div hk") * (k - 1),
-                               F.col("n_exact")).alias("kmv_estimate")))
+                    F.coalesce(
+                        F.expr(f"{_KMV_HSPACE} div hk") * (_KMV_K - 1),
+                        F.col("n_exact")).alias("kmv_estimate")))
 
 
 SQL_SKETCH_DISTINCT_KMV = f"""
@@ -1141,7 +1151,7 @@ FROM n LEFT JOIN kth USING (event_type)
 """
 
 
-def q_sketch_kminima_merge(spark, sf_dir, k: int = _KMV_K, n_salts: int = _KMV_SALTS):
+def q_sketch_kminima_merge(spark, sf_dir):
     """TRUE mergeable bottom-k sketch, end to end: partial sketches are
     sorted k-minima ARRAYS built per (event_type, salt) slice, and the merge
     is the sketch algebra itself — ``merge(A, B) = k smallest of (A ++ B)``
@@ -1160,22 +1170,22 @@ def q_sketch_kminima_merge(spark, sf_dir, k: int = _KMV_K, n_salts: int = _KMV_S
 
     e = t(spark, sf_dir, "events")
     d = e.select("event_type", _kmv_hash().alias("h")).distinct()
-    salted = d.withColumn("salt", F.pmod(F.col("h"), F.lit(n_salts)))
+    salted = d.withColumn("salt", F.pmod(F.col("h"), F.lit(_KMV_SALTS)))
     w1 = Window.partitionBy("event_type", "salt").orderBy("h")
     local = (salted.withColumn("rn", F.row_number().over(w1))
-                   .where(F.col("rn") <= k))
+                   .where(F.col("rn") <= _KMV_K))
     partials = local.groupBy("event_type", "salt").agg(
         F.sort_array(F.collect_list("h")).alias("mins"))
     merged = partials.groupBy("event_type").agg(
         F.count("*").alias("n_partials"),
-        F.slice(F.array_sort(F.flatten(F.collect_list("mins"))), 1, k)
+        F.slice(F.array_sort(F.flatten(F.collect_list("mins"))), 1, _KMV_K)
          .alias("kmins"))
-    hspace = 1 << 60
     return (merged
-            .withColumn("kth_min", F.get("kmins", k - 1))
+            .withColumn("kth_min", F.get("kmins", _KMV_K - 1))
             .select("event_type", "n_partials", "kth_min",
-                    F.coalesce(F.expr(f"{hspace} div kth_min") * (k - 1),
-                               F.size("kmins").cast("bigint"))
+                    F.coalesce(
+                        F.expr(f"{_KMV_HSPACE} div kth_min") * (_KMV_K - 1),
+                        F.size("kmins").cast("bigint"))
                      .alias("kmv_estimate")))
 
 
@@ -2377,30 +2387,32 @@ _PR_SCALE = 10**12
 _PR_ITERS = 5
 
 
-def q_graph_pagerank(spark, sf_dir, iters: int = _PR_ITERS,
-                     pairs: DataFrame | None = None):
+def q_graph_pagerank(spark, sf_dir):
     """Integer-exact PageRank over the near-dup candidate graph: canonical-
     document selection — the best-connected variant of a duplicate family
     ranks highest.  All arithmetic is floored int64 (r0 = 1e12; contrib =
     r div out_deg; r' = 0.15*SCALE + (85 * sum contribs) div 100), so Spark
     and the unrolled DuckDB iteration chain produce bit-identical ranks —
-    float PageRank would diverge on summation order.  Fixed 5 iterations.
+    float PageRank would diverge on summation order.  Fixed _PR_ITERS (5)
+    iterations.
 
     Scale shape per iteration: one equi-join on the edge source + one
     aggregate on the destination — the standard Pregel-style plan; at 10^12
     edges both shuffles key on vertex ids and the rank table stays one row
     per vertex.  Only vertices with candidate edges participate (documented:
-    singletons have no centrality to rank).  ``pairs``: injectable; defaults
-    to the shared per-session materialization (see candidate_pairs).
+    singletons have no centrality to rank).  The edges are the shared
+    per-session pair materialization (see candidate_pairs).
 
     r3 restructure: out-degrees are joined into the STATIC edge table once
     (edges x deg never re-runs per iteration), the edge table is
     pre-partitioned on the per-iteration join key (src) and persisted so
     only the rank table (one row per vertex) shuffles per pass, and each
-    iteration's ranks are eagerly localCheckpoint-ed — the plan stays one
+    iteration's ranks are lazily localCheckpoint-ed — the plan stays one
     iteration deep instead of accreting all five (driver re-optimization
-    of the accreted DAG dominated wall-clock at sandbox scale)."""
-    pairs = pairs if pairs is not None else candidate_pairs(spark, sf_dir)
+    of the accreted DAG dominated wall-clock at sandbox scale).  The loop
+    runs no action of its own: every checkpoint materializes inside the
+    consumer's job."""
+    pairs = candidate_pairs(spark, sf_dir)
     # loop shuffle width from the pair count the memo already paid for
     # (2 directed edges per pair); unknown bound keeps the session conf
     n_pairs = getattr(pairs, "_htmpark_rows", None)
@@ -2418,7 +2430,7 @@ def q_graph_pagerank(spark, sf_dir, iters: int = _PR_ITERS,
     base = 15 * _PR_SCALE // 100
     ranks = verts.select("id", F.lit(_PR_SCALE).cast("bigint").alias("r"))
     with _scoped_conf(spark, {_AQE: "false", _SHUFFLE_PARTS: nparts}):
-        for _ in range(iters):
+        for _ in range(_PR_ITERS):
             contrib = (ed.join(ranks, ed.src == ranks.id)
                        .select(F.col("dst"), F.expr("r div out_deg").alias("c"))
                        .groupBy("dst").agg(F.sum("c").alias("s")))
@@ -2514,8 +2526,7 @@ SELECT doc_id, CAST({bits} AS INT) AS simhash16 FROM v
 )
 
 
-def q_dedup_ngram_jaccard(spark, sf_dir,
-                          broadcast_probes: bool | None = None):
+def q_dedup_ngram_jaccard(spark, sf_dir):
     """n-gram Jaccard against a probe set (doc_id % 97 == 0): exploded
     shingle equi-join -> exact intersection/union counts (no floats).
     The (doc_id, shingle) DISTINCT is canonicalized once: sizes become a
@@ -2525,17 +2536,11 @@ def q_dedup_ngram_jaccard(spark, sf_dir,
 
     Scale: the probe side (shingles of every 97th doc) grows WITH the
     corpus — a forced broadcast would eventually exceed any executor
-    (r7 verdict item 2).  ``broadcast_probes`` gates BOTH probe-derived
-    broadcasts (the shingle set and the probe-size dim) behind the same
-    footer-count crossover as q_text_decontamination: broadcast under
-    _MAX_BROADCAST_PROBE_DOCS probe docs, shuffled hash join on the
-    shingle / probe_id keys above it (both sides already distinct, so
-    the shuffle is the minimal one).  The crossover reads a SOUND upper
-    bound from row-group stats (_probe_rows_upper_bound — no density
-    assumption); stats unavailable = scale unknown = shuffle path."""
-    if broadcast_probes is None:
-        b = _probe_rows_upper_bound(sf_dir, "documents", "doc_id", 97)
-        broadcast_probes = b is not None and b <= _MAX_BROADCAST_PROBE_DOCS
+    (r7 verdict item 2).  The probe shingle set broadcasts behind the
+    same footer-bound crossover as q_text_decontamination
+    (_fits_broadcast under _MAX_BROADCAST_PROBE_DOCS probe docs); above
+    it, or at unknown scale, the join shuffles on the shingle key (both
+    sides already distinct, so the shuffle is the minimal one)."""
     # r12 (guide §2.3/§2.4): the (doc_id, shingle) DISTINCT is per-doc
     # by construction (the key includes doc_id), so it is computed
     # MAP-LOCALLY in one mapInPandas stage that also emits each doc's
@@ -2559,7 +2564,8 @@ def q_dedup_ngram_jaccard(spark, sf_dir,
     probes = d.where(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("probe_id"), "shingle",
         F.col("n_sh").alias("n_a"))
-    if broadcast_probes:
+    if _fits_broadcast(sf_dir, "documents", "doc_id", 97,
+                       _MAX_BROADCAST_PROBE_DOCS):
         probes = F.broadcast(probes)
     return (
         d.join(probes, "shingle")
@@ -2614,22 +2620,23 @@ def _token_windows(spark, sf_dir, w: int) -> DataFrame:
         .alias("h"))
 
 
-# default window width for substring-level ops; the oracle SQLs below are
+# window width for substring-level ops; the oracle SQLs below are
 # DERIVED from this constant so the two sides cannot drift
 _SUBSTR_W = 8
 
 
-def q_dedup_substring(spark, sf_dir, w: int = _SUBSTR_W):
+def q_dedup_substring(spark, sf_dir):
     """Exact substring-window dedup (the shape of Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"): every
-    w-token window of every document is hashed; a window occurrence is a
-    duplicate when a LOWER doc_id contains the same window.  Output per
-    doc: window count, duplicated-window count, and the duplicated
-    fraction in exact basis points (integer division — engine-exact).
+    _SUBSTR_W-token window of every document is hashed; a window
+    occurrence is a duplicate when a LOWER doc_id contains the same
+    window.  Output per doc: window count, duplicated-window count, and
+    the duplicated fraction in exact basis points (integer division —
+    engine-exact).
     Unlike minhash (whole-doc similarity) this catches verbatim passages
     pasted between otherwise-different documents.
 
-    Scale notes: the w-token window hashes are built ARRAY-LOCAL in one
+    Scale notes: the window hashes are built ARRAY-LOCAL in one
     projection (``transform`` over ``sequence`` + ``slice``), so the token
     array is never duplicated per position; only the fixed-width md5
     strings explode.  Pre-explode repartition (same rule as _shingles).
@@ -2639,11 +2646,11 @@ def q_dedup_substring(spark, sf_dir, w: int = _SUBSTR_W):
     h) needs them once — measured 4.6s -> 2.5s at sf1.0, identical
     rows); the per-doc rollup is one more partial-aggregated shuffle on
     doc_id.  No task ever holds more than one doc's token array —
-    every stage survives 10^12 docs.  Docs shorter than w tokens are
-    skipped (no window exists)."""
+    every stage survives 10^12 docs.  Docs shorter than _SUBSTR_W tokens
+    are skipped (no window exists)."""
     from pyspark.sql.window import Window
 
-    win = _token_windows(spark, sf_dir, w)
+    win = _token_windows(spark, sf_dir, _SUBSTR_W)
     wnd = Window.partitionBy("h")
     dup = F.when(F.min("doc_id").over(wnd) < F.col("doc_id"), 1).otherwise(0)
     return (win.select("doc_id", dup.alias("dup"))
@@ -2680,11 +2687,10 @@ GROUP BY doc_id
 _MAX_BROADCAST_PROBE_DOCS = 10_000
 
 
-def q_text_decontamination(spark, sf_dir, w: int = _SUBSTR_W,
-                           broadcast_probes: bool | None = None):
+def q_text_decontamination(spark, sf_dir):
     """Eval-set DECONTAMINATION (the GPT-3/Llama-report shape): for every
-    training candidate, the fraction of its w-token windows that appear
-    anywhere in a benchmark probe set (doc_id % 97 == 0 as the
+    training candidate, the fraction of its _SUBSTR_W-token windows that
+    appear anywhere in a benchmark probe set (doc_id % 97 == 0 as the
     deterministic probe stand-in) — exact basis points; drop or flag above
     a threshold downstream.  Distinct from dedup_substring: this is
     cross-SET containment against a curated eval set, not global
@@ -2692,27 +2698,21 @@ def q_text_decontamination(spark, sf_dir, w: int = _SUBSTR_W,
 
     Scale: probe windows are DISTINCT window hashes of the (small) probe
     set — broadcast into a left semi-ish join (a left join + flag keeps
-    the per-doc totals in one pass).  ``broadcast_probes=False`` drops the
-    hint for a probe set too big to broadcast — the join then
-    hash-partitions on the window hash (both sides pre-aggregated to
-    distinct hashes).  The default (None) is SELF-DERIVED at planning time
-    from the parquet row-group stats and the % 97 probe rule — broadcast
-    under _MAX_BROADCAST_PROBE_DOCS probe docs (a SOUND upper bound, see
-    _probe_rows_upper_bound — no density assumption), shuffled hash join
-    above it OR when stats are unavailable (scale unknown); same
-    decision-lives-in-the-query contract as dedup_embedding_cosine.
-    Corpus side reuses the dedup_substring window build: array-local
-    hashes, pre-explode repartition, fixed-width strings explode — never
-    token arrays."""
-    if broadcast_probes is None:
-        b = _probe_rows_upper_bound(sf_dir, "documents", "doc_id", 97)
-        broadcast_probes = b is not None and b <= _MAX_BROADCAST_PROBE_DOCS
-    win = _token_windows(spark, sf_dir, w)
+    the per-doc totals in one pass).  The regime is derived at planning
+    time from the parquet footers and the % 97 probe rule
+    (_fits_broadcast): broadcast under _MAX_BROADCAST_PROBE_DOCS probe
+    docs; above it, or when stats are unavailable (scale unknown), the
+    join hash-partitions on the window hash (both sides pre-aggregated
+    to distinct hashes).  Corpus side reuses the dedup_substring window
+    build: array-local hashes, pre-explode repartition, fixed-width
+    strings explode — never token arrays."""
+    win = _token_windows(spark, sf_dir, _SUBSTR_W)
     probes = (win.where(F.col("doc_id") % 97 == 0)
                  .select("h").distinct()
                  .withColumn("_hit", F.lit(1)))
     corpus = win.where(F.col("doc_id") % 97 != 0)
-    if broadcast_probes:
+    if _fits_broadcast(sf_dir, "documents", "doc_id", 97,
+                       _MAX_BROADCAST_PROBE_DOCS):
         probes = F.broadcast(probes)
     return (corpus.join(probes, "h", "left")
             .groupBy("doc_id")
@@ -2838,58 +2838,24 @@ def _lsh_bucket_expr(col, n_bits: int = _LSH_BITS):
     ])
 
 
-def _probe_pairs(e: DataFrame, probes: DataFrame,
-                 max_broadcast_probes: int = _MAX_BROADCAST_PROBES,
-                 probe_count: int | None = None,
-                 force_bucketed: bool = False) -> DataFrame:
-    """Pair every embedding row with every (relevant) probe row.
-
-    Broadcast regime (exact): crossJoin(broadcast(probes)) —
-    BroadcastNestedLoopJoin; the big side streams, never shuffles.
-    Bucketed regime (approximate): both sides bucket on the sign-LSH key
-    and equi-join (hash join on the bucket; no broadcast of the probe
-    table, no cartesian).  Plan-asserted in tests for both regimes.
-
-    The regime is a PLANNING-TIME decision made from caller knowledge:
-    ``probe_count`` (the caller's query-batch size, compared against
-    ``max_broadcast_probes``) or ``force_bucketed``.  Rounds 1-2 ran an
-    implicit ``probes.count()`` here — an extra Spark job on every call
-    (the only r1->r2 bench regression) and, at 100 TB, a full probe-table
-    scan before planning even starts.  ``probe_count=None`` means SCALE
-    UNKNOWN and takes the bucketed path (r8 ADVICE: a needless bucket
-    shuffle at gate scale is cheap, a forced broadcast of a set of
-    unknown size is an eventual executor OOM); callers with a genuinely
-    bounded query batch must say so via ``probe_count``.  All in-repo
-    callers derive the count from _self_derived_probes' footer bound."""
-    bucketed = (force_bucketed or max_broadcast_probes <= 0
-                or probe_count is None
-                or probe_count > max_broadcast_probes)
-    if not bucketed:
-        return _fan_out(e).crossJoin(F.broadcast(probes))
+def _probe_pairs(e: DataFrame, probes: DataFrame) -> DataFrame:
+    """Large-regime pairing of embedding rows with probe rows: both sides
+    bucket on the sign-LSH key and equi-join (hash join on the bucket; no
+    broadcast of the probe table, no cartesian) — approximate, recall
+    limited to same-bucket pairs.  Callers take it when _fits_broadcast
+    fails and score through the numpy scorers otherwise.  Neither the
+    regime pick nor this plan runs a counting job (a probe-table scan
+    before planning, at 100 TB)."""
     eb = e.withColumn("_b", _lsh_bucket_expr(F.col("embedding")))
     pb = probes.withColumn("_b", _lsh_bucket_expr(F.col("pe")))
     return eb.join(pb, "_b").drop("_b")
 
 
-def _self_derived_probes(e: DataFrame, sf_dir: str,
-                         probe_count: int | None,
-                         force_bucketed: bool):
-    """The shared probe rule (vec_id % 100 == 0) plus its self-derived
-    planning-time count: a SOUND upper bound on matching rows from the
-    parquet row-group min/max stats (_probe_rows_upper_bound) — no hint
-    to forget, no counting job, no density assumption (the r8 dense-id
-    caveat is gone: sparse/skewed id spaces are bounded correctly by the
-    per-row-group min(rows, multiples-in-range) term).  One definition so
-    the rule and its crossover derivation can never drift between the
-    three probe-pairing queries.  Returns (probes, probe_count);
-    probe_count None = stats unavailable = scale unknown, which
-    _probe_pairs maps to the bucketed path."""
-    if probe_count is None and not force_bucketed:
-        probe_count = _probe_rows_upper_bound(
-            sf_dir, "embeddings", "vec_id", 100)
-    probes = e.where(F.col("vec_id") % 100 == 0).select(
+def _embedding_probes(e: DataFrame) -> DataFrame:
+    """The shared probe rule (vec_id % 100 == 0) as (probe_id, pe) rows:
+    one definition, so the rule cannot drift between the probe queries."""
+    return e.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pe"))
-    return probes, probe_count
 
 
 # ---------------------------------------------------------------------------
@@ -3143,32 +3109,25 @@ def _np_topcells(probes, bc, nprobe: int) -> DataFrame:
                    "probe_id long, cent_id long, pe array<float>, psq double")
 
 
-def q_dedup_embedding_cosine(spark, sf_dir,
-                             max_broadcast_probes: int = _MAX_BROADCAST_PROBES,
-                             probe_count: int | None = None,
-                             force_bucketed: bool = False):
+def q_dedup_embedding_cosine(spark, sf_dir):
     """Embedding near-dup: probe rows (vec_id % 100 == 0) vs all vectors,
     cosine in double with identical fold order both engines, emitted as a
-    round(1e4)-scaled int.  Scale: regime is hint-driven (see
-    _probe_pairs), and THE QUERY DERIVES ITS OWN HINT: this query's probe
-    rule (% 100) scales with the corpus, so when the caller passes no
-    probe_count the planning-time footer stat sizes the probe set as
-    n_rows/100 — at gate scale that stays under the broadcast crossover
-    (exact broadcast plan, oracle-checked), at 10^12 vectors the SAME call
-    flips to the sign-LSH bucket equi-join with no hint to forget and no
-    counting job (both regimes plan-asserted in tests).
+    round(1e4)-scaled int.  Scale: this query's probe rule (% 100) scales
+    with the corpus, so the query sizes the probe set from the parquet
+    footers at planning time (_fits_broadcast under
+    _MAX_BROADCAST_PROBES) — at gate scale that stays under the broadcast
+    crossover (exact broadcast plan, oracle-checked), at 10^12 vectors
+    the SAME call flips to the sign-LSH bucket equi-join (_probe_pairs)
+    with no counting job (both regimes plan-asserted in tests).
 
     r12: the broadcast regime scores through the Arrow-native
     mapInPandas scorer (_np_cosine_candidates — bit-exact, see the
     scorer block comment) with the exact round+filter re-applied in
     Spark; the bucketed regime keeps the pre-r12 Catalyst plan."""
     e = t(spark, sf_dir, "embeddings")
-    probes, probe_count = _self_derived_probes(e, sf_dir, probe_count,
-                                               force_bucketed)
-    bucketed = (force_bucketed or max_broadcast_probes <= 0
-                or probe_count is None
-                or probe_count > max_broadcast_probes)
-    if not bucketed:
+    probes = _embedding_probes(e)
+    if _fits_broadcast(sf_dir, "embeddings", "vec_id", 100,
+                       _MAX_BROADCAST_PROBES):
         cand = _np_cosine_candidates(
             e, _np_probe_broadcast(probes, "probe_id", "pe"),
             min_cos_e4=2000)
@@ -3176,9 +3135,7 @@ def q_dedup_embedding_cosine(spark, sf_dir,
             "probe_id", "vec_id",
             F.round(F.col("cos") * 10000).cast("int").alias("cos_e4"))
             .where(F.col("cos_e4") >= 2000))
-    pairs = (_probe_pairs(e, probes, max_broadcast_probes,
-                          probe_count=probe_count,
-                          force_bucketed=True)
+    pairs = (_probe_pairs(e, probes)
              .where(F.col("probe_id") != F.col("vec_id")))
     cos = _cos_expr(F.col("pe"), F.col("embedding"))
     return (
@@ -3203,26 +3160,18 @@ WHERE probe_id != vec_id
 # ---------------------------------------------------------------------------
 # similarity search (embeddings)
 
-def q_sim_topk_bruteforce(spark, sf_dir,
-                          max_broadcast_probes: int = _MAX_BROADCAST_PROBES,
-                          probe_count: int | None = None,
-                          force_bucketed: bool = False):
+def q_sim_topk_bruteforce(spark, sf_dir):
     """ANN baseline: brute-force cosine top-5 for each probe vector.
-    Deterministic ordering: (scaled cosine desc, vec_id).  Regime is
-    hint-driven (see _probe_pairs) and SELF-DERIVED when the caller passes
-    nothing: the %-100 probe rule makes probe_count = n_rows/100, read
-    from the parquet footer at planning time (same rule and rationale as
-    q_dedup_embedding_cosine — broadcast at gate scale, bucket equi-join
-    at corpus scale, no data scan either way)."""
+    Deterministic ordering: (scaled cosine desc, vec_id).  The regime is
+    derived from the parquet footers at planning time, with the same rule
+    and rationale as q_dedup_embedding_cosine — broadcast at gate scale,
+    bucket equi-join at corpus scale, no data scan either way."""
     from pyspark.sql.window import Window
 
     e = t(spark, sf_dir, "embeddings")
-    probes, probe_count = _self_derived_probes(e, sf_dir, probe_count,
-                                               force_bucketed)
-    bucketed = (force_bucketed or max_broadcast_probes <= 0
-                or probe_count is None
-                or probe_count > max_broadcast_probes)
-    if not bucketed:
+    probes = _embedding_probes(e)
+    if _fits_broadcast(sf_dir, "embeddings", "vec_id", 100,
+                       _MAX_BROADCAST_PROBES):
         # r12 Arrow-native scorer (bit-exact; see scorer block comment):
         # per-task top-(5+3) candidates per probe, exact rank in Spark
         scored = (_np_cosine_candidates(
@@ -3232,8 +3181,7 @@ def q_sim_topk_bruteforce(spark, sf_dir,
     else:
         cos = _cos_expr(F.col("pe"), F.col("embedding"))
         scored = (
-            _probe_pairs(e, probes, max_broadcast_probes,
-                         probe_count=probe_count, force_bucketed=True)
+            _probe_pairs(e, probes)
             .where(F.col("probe_id") != F.col("vec_id"))
             .select("probe_id", "vec_id",
                     F.round(cos * 10000).cast("int").alias("cos_e4"))
@@ -3331,31 +3279,23 @@ def _np_quantized_candidates(e, bc, top_n: int) -> DataFrame:
                    "probe_id long, vec_id long, qdot long")
 
 
-def q_sim_quantized_topk(spark, sf_dir,
-                         max_broadcast_probes: int = _MAX_BROADCAST_PROBES,
-                         probe_count: int | None = None,
-                         force_bucketed: bool = False):
+def q_sim_quantized_topk(spark, sf_dir):
     """ANN serving path #3: int8-QUANTIZED top-5 — the standard 4x
     memory/shuffle-bandwidth reduction for embedding search at scale.
     Vectors are max-abs-scaled to [-127, 127] ints (engine-exact, see
     _quantize_expr) and scored by EXACT INTEGER dot product (64 dims x
     127^2 fits comfortably in int64; no float fold-order anywhere after
     quantization), so ranks are bit-stable and a DuckDB oracle exists.
-    Ordering (qdot desc, vec_id); regime self-derivation identical to
-    q_sim_topk_bruteforce (footer-stat probe_count, broadcast under the
+    Ordering (qdot desc, vec_id); regime derivation identical to
+    q_sim_topk_bruteforce (footer-bound probe count, broadcast under the
     crossover, sign-LSH bucket equi-join above — quantization preserves
     element signs up to the half-step rounding, which only re-buckets
     near-zero components consistently on both sides of the join)."""
     from pyspark.sql.window import Window
 
     e = t(spark, sf_dir, "embeddings")
-    if probe_count is None and not force_bucketed:
-        probe_count = _probe_rows_upper_bound(
-            sf_dir, "embeddings", "vec_id", 100)
-    bucketed = (force_bucketed or max_broadcast_probes <= 0
-                or probe_count is None
-                or probe_count > max_broadcast_probes)
-    if not bucketed:
+    if _fits_broadcast(sf_dir, "embeddings", "vec_id", 100,
+                       _MAX_BROADCAST_PROBES):
         # r12 Arrow-native scorer: probes collected raw and quantized
         # with the SAME op sequence (_np_quantize == _quantize_expr),
         # int64 dot exact, per-task top-5 per probe, global rank below
@@ -3369,14 +3309,11 @@ def q_sim_quantized_topk(spark, sf_dir,
               .select("vec_id",
                       _quantize_expr(F.col("embedding"),
                                      F.col("_mx")).alias("embedding")))
-        probes, probe_count = _self_derived_probes(eq, sf_dir, probe_count,
-                                                   force_bucketed)
         dot = F.aggregate(
             F.zip_with("pe", "embedding", lambda a, b: a * b),
             F.lit(0).cast("bigint"), lambda acc, x: acc + x)
         scored = (
-            _probe_pairs(eq, probes, max_broadcast_probes,
-                         probe_count=probe_count, force_bucketed=True)
+            _probe_pairs(eq, _embedding_probes(eq))
             .where(F.col("probe_id") != F.col("vec_id"))
             .select("probe_id", "vec_id", dot.alias("qdot"))
         )
@@ -3415,14 +3352,13 @@ SELECT probe_id, rank, vec_id, qdot FROM (
 """
 
 
-def q_sim_lsh_buckets(spark, sf_dir, n_bits: int | None = None,
-                      collapse: bool = True):
+def q_sim_lsh_buckets(spark, sf_dir, collapse: bool = True):
     """Sign-LSH scale path: bucket on the sign pattern of the first n_bits
     dims, compare only within buckets — an equi-join on the bucket key, no
     cross join.  Sign comparison is float-free (>= 0), engine-exact.
-    n_bits defaults to _derive_lsh_bits(footer row count): the log2 rule is
-    DERIVED, not documented-and-forgotten — 16 at gate scale (the oracle's
-    fixed width), wider as n grows.
+    n_bits = _derive_lsh_bits(footer row count), the same derivation the
+    oracle text is generated from: the log2 rule is DERIVED, not
+    documented-and-forgotten — 16 at gate scale, wider as n grows.
 
     Giant-cluster hazard, CLOSED by default: m IDENTICAL vectors share
     every bucket, so the raw self-join emits m(m-1)/2 pairs.  collapse=True
@@ -3437,8 +3373,7 @@ def q_sim_lsh_buckets(spark, sf_dir, n_bits: int | None = None,
     row-identical to collapse=False (equality-tested; dup-free holds for
     the gate tables, so the oracle covers both paths)."""
     e = t(spark, sf_dir, "embeddings")
-    if n_bits is None:
-        n_bits = _derive_lsh_bits(_table_num_rows(sf_dir, "embeddings"))
+    n_bits = _derive_lsh_bits(_table_num_rows(sf_dir, "embeddings"))
     member_edges = None
     base = e.select("vec_id", "embedding")
     if collapse:
@@ -3514,31 +3449,27 @@ def resolve_sql(sql, sf_dir: str):
     return sql(sf_dir) if callable(sql) else sql
 
 
-def _centroids_fit_broadcast(sf_dir) -> bool:
-    """Broadcast-regime gate of the IVF / k-means centroid set
-    (``vec_id % 50 == 7``): a SOUND footer bound on its size
-    (_probe_rows_upper_bound with remainder 7), never a dense-id guess —
-    ``n // 50`` under-counts a table whose ids cluster on the centroid
-    residue.  Unknown scale (None) keeps the max_by plan."""
-    b = _probe_rows_upper_bound(sf_dir, "embeddings", "vec_id", 50, 7)
-    return b is not None and b <= _MAX_BROADCAST_PROBES
+# IVF cells searched per probe; the oracle SQL is generated from it.  A
+# recall-curve rerun patches it (BENCH/BASELINE.md "ANN accuracy tradeoff")
+_IVF_NPROBE = 2
 
 
-def q_sim_ivf_topk(spark, sf_dir, nprobe: int = 2):
+def q_sim_ivf_topk(spark, sf_dir):
     """IVF (inverted-file) ANN: the coarse-quantizer scale path.
 
     Cells: a fixed centroid subset (vec_id % 50 == 7, ~n/50 centroids —
     a deterministic stand-in for trained k-means so the oracle stays
     engine-exact).  Every vector is assigned to its best cell (argmax
-    cosine, tiebreak centroid id); probes search their top-2 cells
-    (nprobe=2) and exact-rerank only the candidates in those cells.
+    cosine, tiebreak centroid id); probes search their top-_IVF_NPROBE
+    cells (2, as in the oracle) and exact-rerank only the candidates in
+    those cells.
 
     Scale shape: corpus scoring is a broadcast(centroids) nested-loop —
     O(n*k) but map-local, no shuffle of the big side — and the argmax is a
     ``max_by`` AGGREGATE, so the partial aggregate runs inside the
     broadcast-join stage and only n pre-reduced rows cross the wire (the
     r2 window shape shuffled all n*k scored rows).  Candidate generation
-    is an equi-join on cell id; rerank touches ~nprobe/k of the corpus
+    is an equi-join on cell id; rerank touches ~_IVF_NPROBE/k of the corpus
     instead of all of it.  Cell assignment would be written once as a
     table in production, amortized across every query batch.  Float
     ordering is safe cross-engine because both sides fold the cosine
@@ -3561,12 +3492,12 @@ def q_sim_ivf_topk(spark, sf_dir, nprobe: int = 2):
     e = t(spark, sf_dir, "embeddings")
     cents = e.where(F.col("vec_id") % 50 == 7).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"))
-    if _centroids_fit_broadcast(sf_dir):
+    probes = _embedding_probes(e)
+    if _fits_broadcast(sf_dir, "embeddings", "vec_id", 50,
+                       _MAX_BROADCAST_PROBES, 7):
         bc = _np_probe_broadcast(cents, "cent_id", "ce")
         assign = _np_best_centroid(e, bc, "assign").join(e, "vec_id")
-        probes = e.where(F.col("vec_id") % 100 == 0).select(
-            F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pe"))
-        passign = _np_topcells(probes, bc, nprobe)
+        passign = _np_topcells(probes, bc, _IVF_NPROBE)
         cands = (passign.join(assign, "cent_id")
                  .where(F.col("probe_id") != F.col("vec_id")))
         cos = _cos_pre_expr(F.col("pe"), F.col("embedding"),
@@ -3598,14 +3529,12 @@ def q_sim_ivf_topk(spark, sf_dir, nprobe: int = 2):
     # probe assignment needs top-NPROBE cells, and probes are the bounded
     # query batch (n/100 here, a handful in production) — the window shape
     # is fine on that side
-    probes = e.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pe"))
     cos_p = _cos_expr(F.col("ce"), F.col("pe"))
     wp = Window.partitionBy("probe_id").orderBy(F.col("_c").desc(), "cent_id")
     passign = (probes.crossJoin(F.broadcast(cents))
                .select("probe_id", "pe", "cent_id", cos_p.alias("_c"))
                .withColumn("_r", F.row_number().over(wp))
-               .where(F.col("_r") <= nprobe)
+               .where(F.col("_r") <= _IVF_NPROBE)
                .drop("_c", "_r"))
     cands = (passign.join(assign, "cent_id")
              .where(F.col("probe_id") != F.col("vec_id")))
@@ -3638,7 +3567,7 @@ WITH cents AS (
                               ORDER BY {_duck_cos('c.ce', 'p.pe')} DESC,
                                        c.cent_id) AS r
     FROM probes p, cents c
-  ) WHERE r <= 2
+  ) WHERE r <= {_IVF_NPROBE}
 ), scored AS (
   SELECT pa.probe_id, a.vec_id,
          CAST(round({_duck_cos('pa.pe', 'a.embedding')} * 10000) AS INT) AS cos_e4
@@ -3689,7 +3618,8 @@ def q_sim_kmeans_update(spark, sf_dir):
     e = t(spark, sf_dir, "embeddings")
     cents = e.where(F.col("vec_id") % 50 == 7).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"))
-    if _centroids_fit_broadcast(sf_dir):
+    if _fits_broadcast(sf_dir, "embeddings", "vec_id", 50,
+                       _MAX_BROADCAST_PROBES, 7):
         comp = _np_best_centroid(
             e, _np_probe_broadcast(cents, "cent_id", "ce"), "msters")
         return (comp.groupBy("cent_id", "dim")
@@ -3972,16 +3902,14 @@ GROUP BY e.doc_id
 
 
 # pretraining sequence-packing parameters; the oracle SQL is generated from
-# the same constants (the _SUBSTR_W pattern) so non-default calls can never
-# silently diverge from a stale hand-written literal
+# the same constants (the _SUBSTR_W pattern) so the two sides cannot drift
 _PACK_SEQ_LEN = 2048
 _PACK_BUCKETS = 32
 
 
-def q_text_pack_sequences(spark, sf_dir, seq_len: int = _PACK_SEQ_LEN,
-                          n_buckets: int = _PACK_BUCKETS):
+def q_text_pack_sequences(spark, sf_dir, n_buckets: int = _PACK_BUCKETS):
     """Pretraining SEQUENCE PACKING: concatenate the corpus in doc_id
-    order into one token stream and cut it into fixed ``seq_len``-token
+    order into one token stream and cut it into fixed _PACK_SEQ_LEN-token
     training sequences (the standard concat-and-split batch layout); per
     doc, report its global token offset and the sequence ids it lands in.
 
@@ -4024,8 +3952,8 @@ def q_text_pack_sequences(spark, sf_dir, seq_len: int = _PACK_SEQ_LEN,
     # `div` = exact integer division (a double `/` + floor is exact only
     # while the numerator fits the 53-bit mantissa — not a bet to make at
     # 10^13 tokens)
-    first = F.expr(f"start_tok div {seq_len}")
-    last = F.expr(f"(start_tok + n_tokens - 1) div {seq_len}")
+    first = F.expr(f"start_tok div {_PACK_SEQ_LEN}")
+    last = F.expr(f"(start_tok + n_tokens - 1) div {_PACK_SEQ_LEN}")
     return out.select(
         "doc_id", "n_tokens", "start_tok",
         first.alias("first_seq"), last.alias("last_seq"),
@@ -4108,7 +4036,7 @@ _IDX_SALTS = 32  # deliberately its own constant: the index shares the KMV
 #                  k-minima SHAPE, not the sketches' tuning contract
 
 
-def q_text_inverted_index(spark, sf_dir, n_salts: int = _IDX_SALTS):
+def q_text_inverted_index(spark, sf_dir):
     """Inverted-index build: term -> exact document frequency, collection
     frequency, and a CAPPED ordered posting sample (first
     ``_IDX_POSTING_CAP`` doc_ids).  The cap is the web-scale contract: a
@@ -4121,7 +4049,7 @@ def q_text_inverted_index(spark, sf_dir, n_salts: int = _IDX_SALTS):
     slice keeps collect_list under cap rows per slice (windows sort-spill;
     a collect_set over a stop-word would buffer O(corpus) ids in one agg
     buffer), and the merge is k-minima algebra (flatten + array_sort +
-    slice) over n_salts bounded arrays.  df rides the same salted slices:
+    slice) over _IDX_SALTS bounded arrays.  df rides the same salted slices:
     salt is a pure function of doc_id, so per-slice distinct counts sum
     exactly.  Pre-explode repartition spreads the token explosion.
 
@@ -4137,7 +4065,7 @@ def q_text_inverted_index(spark, sf_dir, n_salts: int = _IDX_SALTS):
     # plus its keyed aggregate; everything downstream is unchanged
     d = _fan_out(t(spark, sf_dir, "documents").select("doc_id", "text"))
     tf, _cf = _lm_frames_over(d)
-    pairs = tf.withColumn("_salt", F.pmod(F.col("doc_id"), F.lit(n_salts)))
+    pairs = tf.withColumn("_salt", F.pmod(F.col("doc_id"), F.lit(_IDX_SALTS)))
     gate = Window.partitionBy("term", "_salt").orderBy("doc_id")
     local = (pairs.withColumn("_rn", F.row_number().over(gate))
              .groupBy("term", "_salt")
@@ -4643,12 +4571,12 @@ _WIN_K = 4  # tokens per k-gram
 _WIN_W = 5  # winnowing window: consecutive k-gram hashes per selection
 
 
-def q_dedup_winnowing(spark, sf_dir, k: int = _WIN_K, w: int = _WIN_W,
-                      fingerprint_rows: bool = False):
+def q_dedup_winnowing(spark, sf_dir, fingerprint_rows: bool = False):
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD 2003 — the MOSS primitive): hash every k-token gram, slide a
-    w-hash window, keep each window's MINIMUM hash; the selected set is
-    a ~2/(w+1) fraction of all grams with the paper's guarantee that any
+    w-hash window (k = _WIN_K, w = _WIN_W), keep each window's MINIMUM
+    hash; the selected set is a ~2/(w+1) fraction of all grams with the
+    paper's guarantee that any
     shared substring of length >= k + w - 1 tokens contributes at least
     one COMMON fingerprint — a bounded, overlap-robust dedup key set
     where plain sampling has no such guarantee.  (Variant note: we keep
@@ -4672,6 +4600,7 @@ def q_dedup_winnowing(spark, sf_dir, k: int = _WIN_K, w: int = _WIN_W,
 
     import numpy as np
 
+    k, w = _WIN_K, _WIN_W
     d = _fan_out(t(spark, sf_dir, "documents")
                  .select("doc_id", "text")
                  .where(F.size(F.split("text", " ")) >= k + w - 1))
@@ -6141,12 +6070,17 @@ def _robots_delay_df(spark, n_keys: int):
                      "hmod int, delay_s int")
 
 
-def q_web_politeness_budget(spark, sf_dir, window_s: int = 3600):
+# the politeness budget's crawl window in seconds; the oracle SQL is
+# generated from it
+_POLITE_WINDOW_S = 3600
+
+
+def q_web_politeness_budget(spark, sf_dir):
     """Per-host politeness/fetch-budget scheduler — the consumer of the
     Crawl-delay extension value (r6 verdict item 4: parsed but unused).
     The crawl-frontier rollup (allowed targets per host) joins the
-    crawl-delay dimension, and a token-bucket budget over a
-    ``window_s``-second crawl window decides, all integer-exact:
+    crawl-delay dimension, and a token-bucket budget over a crawl window
+    of ``window_s`` = _POLITE_WINDOW_S seconds decides, all integer-exact:
 
     * ``delay_s``       — the host's declared delay, default 1 s;
     * ``n_fetch_now``   — targets fetchable THIS window =
@@ -6169,7 +6103,7 @@ def q_web_politeness_budget(spark, sf_dir, window_s: int = 3600):
                            (F.col("host_num") % 4) == F.col("hmod"),
                            "left")
     delay_eff = F.coalesce(F.col("delay_s"), F.lit(1))
-    max_fetch = F.expr(f"CAST({window_s} DIV _delay_eff AS BIGINT)")
+    max_fetch = F.expr(f"CAST({_POLITE_WINDOW_S} DIV _delay_eff AS BIGINT)")
     fetch_now = F.least(F.col("n_allowed_targets"), max_fetch)
     return (joined.withColumn("_delay_eff", delay_eff)
             .withColumn("n_fetch_now", fetch_now)
@@ -6180,7 +6114,8 @@ def q_web_politeness_budget(spark, sf_dir, window_s: int = 3600):
                 (F.col("n_allowed_targets") - F.col("n_fetch_now"))
                 .cast("bigint").alias("n_deferred"),
                 F.expr(f"CAST((n_allowed_targets * _delay_eff "
-                       f"+ {window_s} - 1) DIV {window_s} AS BIGINT)")
+                       f"+ {_POLITE_WINDOW_S} - 1) DIV {_POLITE_WINDOW_S} "
+                       f"AS BIGINT)")
                 .alias("n_waves")))
 
 
@@ -6194,11 +6129,11 @@ d(hmod, delay_s) AS (VALUES (0, 5), (1, 2), (2, 10), (3, NULL))
 SELECT f.host_num, f.n_targets, f.n_allowed_targets,
        CAST(COALESCE(d.delay_s, 1) AS INT) AS delay_s,
        CAST(LEAST(f.n_allowed_targets,
-                  3600 // COALESCE(d.delay_s, 1)) AS BIGINT) AS n_fetch_now,
+                  {_POLITE_WINDOW_S} // COALESCE(d.delay_s, 1)) AS BIGINT) AS n_fetch_now,
        CAST(f.n_allowed_targets
             - LEAST(f.n_allowed_targets,
-                    3600 // COALESCE(d.delay_s, 1)) AS BIGINT) AS n_deferred,
-       CAST((f.n_allowed_targets * COALESCE(d.delay_s, 1) + 3599) // 3600
+                    {_POLITE_WINDOW_S} // COALESCE(d.delay_s, 1)) AS BIGINT) AS n_deferred,
+       CAST((f.n_allowed_targets * COALESCE(d.delay_s, 1) + {_POLITE_WINDOW_S - 1}) // {_POLITE_WINDOW_S}
             AS BIGINT) AS n_waves
 FROM f JOIN d ON f.host_num % 4 = d.hmod
 """
@@ -6247,7 +6182,7 @@ FROM documents
 _BFS_HOSTS = 96
 
 
-def q_web_crawl_bfs(spark, sf_dir, max_waves: int = _BFS_HOSTS):
+def q_web_crawl_bfs(spark, sf_dir):
     """Crawl-wave scheduling: multi-wave BFS from a seed host over the
     host-level link graph — per reached host, the WAVE (hop distance)
     on which a breadth-first crawler first fetches it.  This is the
@@ -6270,12 +6205,14 @@ def q_web_crawl_bfs(spark, sf_dir, max_waves: int = _BFS_HOSTS):
     on src and persisted once — only the frontier moves per wave) +
     one left-anti join against the visited set (one row per reached
     vertex, the crawl's dedup ledger) — both shuffles key on vertex
-    ids.  Each wave's frontier is eagerly localCheckpoint-ed so the
-    plan stays one wave deep, and AQE is off in the loop (plan
-    re-derivation per iteration dominated wall-clock at sandbox scale).
-    Wave count is bounded by graph diameter, max_waves is the
-    safety stop.  At 10^8 hosts the visited set and frontier are both
-    one-row-per-host tables partitioned on the join key — nothing in
+    ids.  Each wave's frontier is lazily localCheckpoint-ed so the plan
+    stays one wave deep; the wave's termination count is the action that
+    materializes it.  AQE is off in the loop (plan re-derivation per
+    iteration dominated wall-clock at sandbox scale).  Wave count is
+    bounded by graph diameter; _BFS_HOSTS waves (no shortest path is
+    longer) is the safety stop.  At 10^8 hosts the visited set and
+    frontier are both one-row-per-host tables partitioned on the join
+    key — nothing in
     the loop is proportional to pages, only to hosts and edges.
 
     Graph build and loop live in _bfs_edges/_bfs_waves, shared with the
@@ -6287,7 +6224,7 @@ def q_web_crawl_bfs(spark, sf_dir, max_waves: int = _BFS_HOSTS):
     edges = _bfs_edges(spark, sf_dir, nparts)
     dist = _bfs_waves(
         spark, edges,
-        spark.createDataFrame([(0, 0)], "host int, wave int"), max_waves,
+        spark.createDataFrame([(0, 0)], "host int, wave int"), _BFS_HOSTS,
         nparts=nparts)
     edges.unpersist()
     return dist.select(F.col("host").cast("int").alias("host"),
@@ -6321,8 +6258,9 @@ def _bfs_waves(spark, edges: DataFrame, dist: DataFrame,
                nparts: int | None = None) -> DataFrame:
     """The shared per-wave BFS loop (scale shape documented on
     q_web_crawl_bfs): per wave ONE keyed equi-join of the frontier
-    against the static persisted edges + one left-anti visited join,
-    eager localCheckpoint to keep the plan one wave deep, AQE off.
+    against the static persisted edges + one left-anti visited join, a
+    lazy localCheckpoint (materialized by the wave's termination count)
+    to keep the plan one wave deep, AQE off.
     ``dist`` is the seed table (host, wave-0 rows) — a single row for
     the classic BFS, the sitemap-derived seed set for the publisher-
     seeded variant (multi-source BFS: wave = distance to the NEAREST
@@ -6469,7 +6407,7 @@ SELECT host, wave FROM bfs
 # per-host target counts (tens to ~100 allowed) a 60 s window makes the
 # token budget BIND (hosts spill across waves) at every sf, so the
 # spill arithmetic is actually exercised by the oracle — the
-# politeness query's 3600 s default would drain every host in one wave
+# politeness query's 3600 s window would drain every host in one wave
 # at gate scale and the spill path would go untested
 _SCHED_WINDOW_S = 60
 
@@ -6486,13 +6424,12 @@ _SCHED_WINDOW_S = 60
 _SCHED_HORIZON_CAP = 1 << 16
 
 
-def q_web_crawl_schedule(spark, sf_dir, window_s: int = _SCHED_WINDOW_S,
-                         horizon: int | None = None):
+def q_web_crawl_schedule(spark, sf_dir, horizon: int | None = None):
     """Budget-paced crawl schedule — per-host politeness applied to BFS
     wave pacing (r8 verdict item 3: web_politeness_budget computed
     n_fetch_now/n_waves but nothing consumed them).  For every host the
     publisher-seeded BFS reaches, its robots-allowed frontier targets
-    drain at most ``cap = max(1, window_s div delay_s)`` fetches per
+    drain at most ``cap = max(1, _SCHED_WINDOW_S div delay_s)`` fetches per
     wave (the politeness token bucket, one crawl window per BFS wave;
     the clamp admits the first fetch even when a declared delay exceeds
     the window): fetching starts the wave the host is DISCOVERED, a
@@ -6538,7 +6475,7 @@ def q_web_crawl_schedule(spark, sf_dir, window_s: int = _SCHED_WINDOW_S,
                     (F.col("host_num") % 4) == F.col("hmod"), "left")
               .select("host_num",
                       F.col("n_allowed_targets").alias("allowed"),
-                      F.expr(f"CAST(GREATEST(1, {int(window_s)} DIV "
+                      F.expr(f"CAST(GREATEST(1, {_SCHED_WINDOW_S} DIV "
                              f"coalesce(delay_s, 1)) AS BIGINT)")
                       .alias("cap")))
     j = (dist.join(budget, dist["host"] == budget["host_num"])
@@ -7067,7 +7004,7 @@ ORDER BY 1
 """
 
 
-def q_dedup_label_noise(spark, sf_dir, pairs: DataFrame | None = None):
+def q_dedup_label_noise(spark, sf_dir):
     """Label-noise / representation-drift audit: MinHash near-dup TEXT
     pairs whose EMBEDDINGS disagree (cosine below 0.8) — texts the dedup
     pass says are the same document but the embedding model says are not.
@@ -7081,8 +7018,7 @@ def q_dedup_label_noise(spark, sf_dir, pairs: DataFrame | None = None):
     doc id pull in both embeddings; cosine + flag are row-local.  At
     10^12 docs the pair table is the small side — AQE broadcasts it when
     it fits, and both joins shuffle at most |pairs| + matched vectors."""
-    if pairs is None:
-        pairs = candidate_pairs(spark, sf_dir)
+    pairs = candidate_pairs(spark, sf_dir)
     e = t(spark, sf_dir, "embeddings")
     ea = e.select(F.col("vec_id").alias("doc_a"),
                   F.col("embedding").alias("emb_a"))

@@ -160,31 +160,23 @@ def test_explode_queries_repartition_before_expansion(spark):
             plan.index("MapInPandas"), name
 
 
-def test_probe_join_scale_guard(spark):
+def test_probe_join_scale_guard(spark, monkeypatch):
     """Embedding probe pairing: exact broadcast below the crossover, sign-LSH
     bucket equi-join above it (never a broadcast of a huge probe table)."""
-    from htmpark.queries import q_dedup_embedding_cosine
+    from htmpark import queries as qm
 
     # default: small probe set -> Arrow-native mapInPandas scorer (r12;
     # exact, corpus side streams, probes ride a broadcast variable)
-    dflt = q_dedup_embedding_cosine(spark, SF)
+    dflt = qm.q_dedup_embedding_cosine(spark, SF)
     plan = dflt._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
-    # a declared corpus-scale probe set (probe_count hint over threshold)
-    # must route to the bucketed regime without any counting job
-    hinted = q_dedup_embedding_cosine(spark, SF, probe_count=10**9)
-    hplan = hinted._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in hplan
-    forced = q_dedup_embedding_cosine(spark, SF, force_bucketed=True)
-    assert "BroadcastNestedLoopJoin" not in \
-        forced._jdf.queryExecution().executedPlan().toString()
-
     # forced crossover: probe table must NOT broadcast-nested-loop; the
     # pairing becomes an equi-join on the sign-LSH bucket key
-    guarded = q_dedup_embedding_cosine(spark, SF, max_broadcast_probes=0)
+    monkeypatch.setattr(qm, "_MAX_BROADCAST_PROBES", 0)
+    guarded = qm.q_dedup_embedding_cosine(spark, SF)
     gplan = guarded._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in gplan
     assert "CartesianProduct" not in gplan
@@ -259,8 +251,8 @@ def test_probe_rows_upper_bound(tmp_path):
 
 
 def test_unknown_probe_scale_routes_to_bucketed(spark, tmp_path):
-    """probe_count=None now means SCALE UNKNOWN and takes the bucketed
-    path (r8 ADVICE: the old default re-enabled the forced probe
+    """A footer without statistics means SCALE UNKNOWN and takes the
+    bucketed path (r8 ADVICE: the old default re-enabled the forced probe
     broadcast exactly when scale was unknown).  End-to-end: an embeddings
     table written WITHOUT statistics must plan the sign-LSH bucket
     equi-join, never a broadcast nested loop."""
@@ -427,29 +419,30 @@ def test_ivf_assignment_aggregates_map_side(spark):
     assert "partial_max_by" not in plan
 
 
-def test_probe_pairs_never_counts_eagerly(spark):
-    """Building a probe-pairing query must not launch a count job (the
-    r1->r2 bench regression): regime selection is hint-driven."""
+def test_probe_pairs_never_counts_eagerly(spark, monkeypatch):
+    """Building a footer-gated probe query must not launch a count job
+    (the r1->r2 bench regression): the regime is read from parquet
+    footers, in the broadcast regime and in the large one (caps 0)."""
     from pyspark.sql import DataFrame
 
     from htmpark import queries as qm
 
-    orig = DataFrame.count
-
     def boom(self):
         raise AssertionError("probe regime selection ran an eager count")
 
-    DataFrame.count = boom
-    try:
-        qm.q_dedup_embedding_cosine(spark, SF)
-        qm.q_sim_topk_bruteforce(spark, SF)
-        qm._probe_pairs(
-            tblq := qm.t(spark, SF, "embeddings"),
-            tblq.select(F.col("vec_id").alias("probe_id"),
-                        F.col("embedding").alias("pe")),
-            probe_count=10**9)  # hinted huge -> bucketed, still no count
-    finally:
-        DataFrame.count = orig
+    builders = (qm.q_dedup_embedding_cosine, qm.q_sim_topk_bruteforce,
+                qm.q_dedup_ngram_jaccard, qm.q_text_decontamination,
+                qm.q_sim_quantized_topk, qm.q_sim_ivf_topk,
+                qm.q_sim_kmeans_update)
+    monkeypatch.setattr(DataFrame, "count", boom)
+    for fn in builders:
+        fn(spark, SF)
+    monkeypatch.setattr(qm, "_MAX_BROADCAST_PROBES", 0)
+    monkeypatch.setattr(qm, "_MAX_BROADCAST_PROBE_DOCS", 0)
+    for fn in builders:
+        fn(spark, SF)
+    tbl = qm.t(spark, SF, "embeddings")
+    qm._probe_pairs(tbl, qm._embedding_probes(tbl))
 
 
 def test_asof_attribution_single_exchange_and_python_oracle(spark):
@@ -936,16 +929,21 @@ def test_quantiles_caller_column_collision(spark):
     assert got == {(0, 50): 5, (1, 50): 7}
 
 
-def test_decontamination_unbroadcast_regime(spark):
-    """broadcast_probes=False must produce identical results through the
-    hash-partitioned join (the too-big-to-broadcast crossover)."""
-    from htmpark.queries import q_text_decontamination
+def test_decontamination_unbroadcast_regime(spark, monkeypatch):
+    """Past the probe-doc cap the probe windows must drop their broadcast
+    hint and produce identical results through the hash-partitioned join
+    (the too-big-to-broadcast crossover)."""
+    from htmpark import queries as qm
 
+    dflt = qm.q_text_decontamination(spark, SF)
+    assert _hinted(dflt)
     a = {(r.doc_id, r.n_windows, r.n_contaminated, r.contam_bp)
-         for r in q_text_decontamination(spark, SF).collect()}
+         for r in dflt.collect()}
+    monkeypatch.setattr(qm, "_MAX_BROADCAST_PROBE_DOCS", 0)
+    big = qm.q_text_decontamination(spark, SF)
+    assert not _hinted(big)
     b = {(r.doc_id, r.n_windows, r.n_contaminated, r.contam_bp)
-         for r in q_text_decontamination(
-             spark, SF, broadcast_probes=False).collect()}
+         for r in big.collect()}
     assert a == b and a
 
 
@@ -954,20 +952,20 @@ def _hinted(df) -> bool:
         df._jdf.queryExecution().analyzed().toString()
 
 
-def test_ngram_jaccard_unbroadcast_regime(spark):
-    """Past the probe crossover, BOTH probe-derived broadcasts (the
-    shingle set and the probe-size dim) must drop their forced hint —
-    plain hash-partitioned equi-joins; AQE may still adaptively
-    broadcast a genuinely small runtime side, which is fine — and the
-    results must be identical (r7 verdict item 2)."""
-    from htmpark.queries import q_dedup_ngram_jaccard
+def test_ngram_jaccard_unbroadcast_regime(spark, monkeypatch):
+    """Past the probe crossover, the probe shingle set must drop its
+    forced hint — a plain hash-partitioned equi-join; AQE may still
+    adaptively broadcast a genuinely small runtime side, which is fine —
+    and the results must be identical (r7 verdict item 2)."""
+    from htmpark import queries as qm
 
-    dflt = q_dedup_ngram_jaccard(spark, SF)
+    dflt = qm.q_dedup_ngram_jaccard(spark, SF)
     assert _hinted(dflt)  # gate scale: probe set broadcasts
     plan = dflt._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
-    big = q_dedup_ngram_jaccard(spark, SF, broadcast_probes=False)
+    monkeypatch.setattr(qm, "_MAX_BROADCAST_PROBE_DOCS", 0)
+    big = qm.q_dedup_ngram_jaccard(spark, SF)
     assert not _hinted(big)
     a = {tuple(r) for r in dflt.collect()}
     b = {tuple(r) for r in big.collect()}
@@ -1061,19 +1059,22 @@ def test_lsh_collapse_equality_and_linear_output(spark, tmp_path):
     assert components(collapsed, m + 2) == components(full, m + 2)
 
 
-def test_probe_regime_is_self_derived(spark):
-    """With NO caller hint, the probe queries size their probe set from the
-    parquet footer (%-100 rule): at gate scale that stays broadcast, and a
-    crossover below the derived count must flip the SAME hint-free call to
-    the bucketed plan — the decision lives in the query."""
-    from htmpark.queries import q_dedup_embedding_cosine, q_sim_topk_bruteforce
+def test_probe_regime_is_self_derived(spark, monkeypatch):
+    """The probe queries size their probe set from the parquet footer
+    (%-100 rule): at gate scale that stays broadcast, and a crossover
+    below the derived count must flip the SAME call to the bucketed
+    plan — the decision lives in the query."""
+    from htmpark import queries as qm
 
-    for fn in (q_dedup_embedding_cosine, q_sim_topk_bruteforce):
+    fns = (qm.q_dedup_embedding_cosine, qm.q_sim_topk_bruteforce,
+           qm.q_sim_quantized_topk)
+    for fn in fns:
         dflt = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
         assert "MapInPandas" in dflt  # r12 Arrow-native broadcast regime
-        # sf0.001 derives probe_count = 500 // 100 = 5 > 3: bucketed, no hint
-        flipped = fn(spark, SF, max_broadcast_probes=3) \
-            ._jdf.queryExecution().executedPlan().toString()
+    # sf0.001's footers bound the probe set at 500 // 100 = 5 > 3: bucketed
+    monkeypatch.setattr(qm, "_MAX_BROADCAST_PROBES", 3)
+    for fn in fns:
+        flipped = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
         assert "MapInPandas" not in flipped
         assert "BroadcastNestedLoopJoin" not in flipped
         assert "CartesianProduct" not in flipped
@@ -1282,18 +1283,18 @@ def test_pack_sequences_two_phase_prefix_sum(spark):
     assert not any("doc_id" in s and "_bkt" not in s for s in specs), specs
 
 
-def test_quantized_topk_recall_and_regimes(spark):
+def test_quantized_topk_recall_and_regimes(spark, monkeypatch):
     """int8 quantization must preserve neighbor structure (recall@5 vs the
     exact float cosine top-5 stays high on the gate set) and share the
     broadcast/bucketed regime machinery (forced bucketed plan contains no
     BroadcastNestedLoopJoin)."""
-    from htmpark.queries import q_sim_quantized_topk, q_sim_topk_bruteforce
+    from htmpark import queries as qm
 
     exact = {}
-    for r in q_sim_topk_bruteforce(spark, SF).collect():
+    for r in qm.q_sim_topk_bruteforce(spark, SF).collect():
         exact.setdefault(r.probe_id, set()).add(r.vec_id)
     quant = {}
-    for r in q_sim_quantized_topk(spark, SF).collect():
+    for r in qm.q_sim_quantized_topk(spark, SF).collect():
         quant.setdefault(r.probe_id, set()).add(r.vec_id)
     assert set(quant) == set(exact)
     hits = sum(len(exact[p] & quant[p]) for p in exact)
@@ -1306,7 +1307,8 @@ def test_quantized_topk_recall_and_regimes(spark):
     # noise: a broken quantizer scores ~5/25 on this data.
     assert hits / total >= 0.5, f"quantized recall@5 = {hits}/{total}"
 
-    plan = (q_sim_quantized_topk(spark, SF, force_bucketed=True)
+    monkeypatch.setattr(qm, "_MAX_BROADCAST_PROBES", 0)
+    plan = (qm.q_sim_quantized_topk(spark, SF)
             ._jdf.queryExecution().executedPlan().toString())
     assert "BroadcastNestedLoopJoin" not in plan, plan[:2000]
 
@@ -1428,6 +1430,35 @@ def test_registry_outputs_are_scalar(spark):
             if isinstance(field.dataType, (ArrayType, MapType, StructType)):
                 bad.append(f"{name}.{field.name}: {field.dataType.simpleString()}")
     assert not bad, f"non-scalar driver output columns: {bad}"
+
+
+# the only options a registry builder takes beyond (spark, sf_dir): each
+# is set by a program caller or used by a test as a reference or input
+_BUILDER_OPTIONS = {
+    "q_dedup_clusters": {"pairs", "star"},
+    "q_curation_pipeline": {"clusters", "signals"},
+    "q_text_quality_filter": {"signals"},
+    "q_text_repetition": {"signals"},
+    "q_text_unigram_lm": {"signals"},
+    "q_sim_lsh_buckets": {"collapse"},
+    "q_web_crawl_schedule": {"horizon"},
+    "q_text_pack_sequences": {"n_buckets"},
+    "q_dedup_winnowing": {"fingerprint_rows"},
+}
+
+
+def test_registry_builders_take_only_caller_options():
+    """Every caller runs a registry builder as fn(spark, sf_dir), and the
+    oracle texts are built from module constants: a tuning or regime
+    option no caller sets would be a configuration the oracle gate never
+    checks.  Extra parameters must be in the _BUILDER_OPTIONS list."""
+    import inspect
+
+    for name, (fn, _sql) in REGISTRY.items():
+        params = list(inspect.signature(fn).parameters)
+        assert params[:2] == ["spark", "sf_dir"], name
+        extra = set(params[2:]) - _BUILDER_OPTIONS.get(fn.__name__, set())
+        assert not extra, (name, sorted(extra))
 
 
 def test_registry_order_is_safe():
@@ -2093,7 +2124,9 @@ def test_centroid_gate_counts_clustered_ids(spark, monkeypatch, tmp_path):
     }), str(tmp_path / "embeddings.parquet"))
     assert qm._probe_rows_upper_bound(str(tmp_path), "embeddings",
                                       "vec_id", 50, 7) == n
-    assert qm._centroids_fit_broadcast(SF)  # dense ids: broadcast regime
+    # dense ids: broadcast regime
+    assert qm._fits_broadcast(SF, "embeddings", "vec_id", 50,
+                              qm._MAX_BROADCAST_PROBES, 7)
 
     def no_broadcast(*a, **k):
         raise AssertionError("centroid set broadcast beyond the bound")
